@@ -501,7 +501,7 @@ object ScaleBench {
         val losers = Dedup.nearDupSurvivors(pairs, "doc_a", "doc_b")
           .filter(!col("keep")).select(col("doc_id").as("__loser"))
         val withinSurv = b.join(losers, b("doc_id") === col("__loser"), "left_anti")
-        val fresh = Checkpoints.pinner(spark, None)(
+        val fresh = Checkpoints.pin(
           Text.minhashDedupAgainstIndex(withinSurv, "doc_id", "text",
             3, 16, 0.5, fuzzyPrefix(f)))
         TxTable.append(spark, fuzzyRoot(f), fresh)

@@ -3050,11 +3050,10 @@ object SparkEntry {
       // string id is reconstructed once, after the last aggregate.
       // pinned: the symmetrizing union consumes pairs twice — without the
       // pin the orders⋈lineitem join + distinct executes once per direction
-      val pairs = t(s, d, "orders")
+      val pairs = Checkpoints.pin(t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-        .localCheckpoint(false)
+        .distinct(), eager = false)
       val edges = pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
       // pinEvery = 3: the whole 3-round unroll runs as ONE job — lineage
       // depth 3 is the documented recovery bound, not a per-round barrier
@@ -3387,10 +3386,9 @@ object SparkEntry {
       // pinned: the (text, nt) projection feeds THREE stage aggregates plus
       // the digest dedup and the minhash pipeline — without the pin each
       // consumer re-scans the parquet and re-tokenizes every document
-      val docs = t(s, d, "documents")
+      val docs = Checkpoints.pin(t(s, d, "documents")
         .select(col("doc_id"), col("text"),
-          size(Text.tokens(col("text"))).cast("long").as("nt"))
-        .localCheckpoint(false)
+          size(Text.tokens(col("text"))).cast("long").as("nt")), eager = false)
       val exact = Dedup.dedupByDigest(docs, "text", "doc_id")
       def stage(name: String, df: DataFrame): DataFrame =
         df.agg(lit(name).as("stage"), count(lit(1)).as("n_docs"),
@@ -3401,12 +3399,12 @@ object SparkEntry {
       // concurrently (guide §2.6, see q162); both are 1-row pins. Same
       // aggregates over the same rows; only the scheduling overlaps.
       val Seq(dropped, s12) = concurrently(
-        () => Dedup.nearDupSurvivors(
+        () => Checkpoints.pin(Dedup.nearDupSurvivors(
             Text.minhashNearDupPairs(exact, "doc_id", "text", 3, 16, 0.5),
             "doc_a", "doc_b")
-          .filter(!col("keep")).select(col("doc_id")).localCheckpoint(),
-        () => stage("1_raw", docs)
-          .unionByName(stage("2_exact", exact)).localCheckpoint())
+          .filter(!col("keep")).select(col("doc_id"))),
+        () => Checkpoints.pin(stage("1_raw", docs)
+          .unionByName(stage("2_exact", exact))))
       val fuzzy = exact.join(dropped, Seq("doc_id"), "left_anti")
       s12
         .unionByName(stage("3_fuzzy", fuzzy))
@@ -3498,10 +3496,10 @@ object SparkEntry {
       // the final recall/precision assembly reads two pinned row sets. Same
       // pairs, same arithmetic — only the build overlaps.
       val Seq(exact, lsh) = concurrently(
-        () => Text.jaccardNearDupPairs(docs, "doc_id", "text", 3, 0.5)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint(),
-        () => Text.minhashNearDupPairs(docs, "doc_id", "text", 3, 16, 0.5)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint())
+        () => Checkpoints.pin(Text.jaccardNearDupPairs(docs, "doc_id", "text", 3, 0.5)
+          .select(col("doc_a"), col("doc_b"))),
+        () => Checkpoints.pin(Text.minhashNearDupPairs(docs, "doc_id", "text", 3, 16, 0.5)
+          .select(col("doc_a"), col("doc_b"))))
       val both = exact.intersect(lsh)
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
@@ -3563,11 +3561,10 @@ object SparkEntry {
       // their pin/stage barriers overlap (guide §2.6, see q162); each pair
       // set is tiny and eagerly pinned inside its thread.
       val Seq(exact, capped) = concurrently(
-        () => Text.jaccardNearDupPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 5000)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint(),
-        () => Text.minhashNearDupPairs(corpus, "doc_id", "text", 3, 16, 0.5,
-            maxBucket = 64)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint())
+        () => Checkpoints.pin(Text.jaccardNearDupPairs(corpus, "doc_id", "text", 3, 0.5,
+            maxDf = 5000).select(col("doc_a"), col("doc_b"))),
+        () => Checkpoints.pin(Text.minhashNearDupPairs(corpus, "doc_id", "text", 3, 16, 0.5,
+            maxBucket = 64).select(col("doc_a"), col("doc_b"))))
       def dupDocs(p: DataFrame) =
         p.select(explode(array(col("doc_a"), col("doc_b"))).as("id")).distinct()
       exact.agg(count(lit(1)).as("n_exact"))

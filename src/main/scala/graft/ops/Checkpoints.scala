@@ -1,28 +1,27 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
-/** Round-pinning policy for iterative operators (PageRank, connected
-  * components): each round's result must be materialized with lineage
-  * truncated — otherwise the plan nests one join+agg deeper per round and
-  * round N replays rounds 1..N−1.
+/** The engine's one pin policy. Every lineage-truncating materialization
+  * (iterative rounds of PageRank / connected components / BPE, and the
+  * multi-consumer artifacts operators pin once) goes through [[pin]], so
+  * the local-vs-reliable choice is made in exactly one place:
+  *  - no checkpoint dir on the session: `localCheckpoint` — executor block
+  *    storage, no filesystem round-trip, but an executor loss makes the
+  *    pin unrecoverable and fails the job loudly. Right for benchmarks and
+  *    short jobs.
+  *  - a checkpoint dir on the SparkContext (`spark.checkpoint.dir`, or
+  *    set programmatically): reliable `checkpoint` — survives executor
+  *    loss, the right trade on a 1000-executor cluster where losing one
+  *    machine mid-iteration-10 of a corpus-scale PageRank must not restart
+  *    the job. Costs one filesystem write per pin.
   *
-  * Two pinning modes, chosen per call site:
-  *  - `localCheckpoint` (default): executor block storage — no filesystem
-  *    round-trip, but an executor loss makes the checkpoint unrecoverable
-  *    and fails the job loudly. Right for benchmarks and short jobs.
-  *  - reliable `checkpoint(dir)`: survives executor loss — the right trade
-  *    on a 1000-executor cluster where losing one machine mid-iteration-10
-  *    of a corpus-scale PageRank must not restart the job. Costs one
-  *    filesystem write per round.
+  * Set `spark.checkpoint.dir` and every pin in the engine is reliable.
   */
 object Checkpoints {
 
-  /** The pinning function for `dir`: reliable checkpoints into `dir` when
-    * set, localCheckpoint otherwise. The checkpoint directory is a
-    * SparkContext-level setting — last caller wins, which is fine because
-    * the dir only namespaces files.
+  /** Pin `df` under the session's policy (see above).
     *
     * `eager = false` defers materialization to the consumer's first action
     * (no standalone job barrier — setup artifacts that feed exactly the
@@ -30,15 +29,9 @@ object Checkpoints {
     * right mode for any artifact that will later be [[release]]d — release
     * semantics on a never-materialized lazy checkpoint would be undefined.
     */
-  def pinner(spark: SparkSession, dir: Option[String], eager: Boolean = true)
-      : DataFrame => DataFrame =
-    dir match {
-      case Some(d) =>
-        spark.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = eager)
-      case None =>
-        df => df.localCheckpoint(eager = eager)
-    }
+  def pin(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 
   /** Free a SUPERSEDED round's pinned blocks (no-op for reliable
     * checkpoints, whose data lives in files, not the block store). Callers

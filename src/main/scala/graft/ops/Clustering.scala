@@ -114,9 +114,8 @@ object Clustering {
     // This is the iterative-fit training-set cache, not cross-run caching
     // (the caller's terminal action still computes from the parquet input;
     // Bench/Verify release pinned blocks after each query).
-    val clean = Text.spreadIfNarrow(
-        df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim))
-      .localCheckpoint(false)
+    val clean = Checkpoints.pin(Text.spreadIfNarrow(
+        df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)), eager = false)
     var centroids: Seq[(Int, Seq[Double])] = seeds.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
     var assigned  = clean
     var stats     = Seq.empty[(Int, Long, Seq[Double])]

@@ -355,7 +355,7 @@ object Curation {
     // dev feeds two consumers (the MAD ranking and the final score join):
     // the narrow path pins it inside runningSums (pinInput), the wide path
     // pins it here — either way the med join runs once
-    val dev = if (wide) dev0.localCheckpoint(false) else dev0
+    val dev = if (wide) Checkpoints.pin(dev0, eager = false) else dev0
     val mad = lowerMedian(dev.select(col(keyCol), col(idCol), col("__dev")),
       "__dev", "__mad", pin = !wide)
     dev.join(glue(mad), Seq(keyCol))

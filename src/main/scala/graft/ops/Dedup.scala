@@ -105,8 +105,9 @@ object Dedup {
     * hash-collision caveat (empty ⟺ fixed, per-node equality). The round's
     * pin is LAZY: the changed-count is the round's ONE action, and
     * materializing the pinned labels is its side effect
-    * (PlanSpec pins the per-round action count). `localCheckpoint` truncates
-    * the growing lineage so round N's plan does not replay rounds 1..N-1.
+    * (PlanSpec pins the per-round action count). The pin ([[Checkpoints]])
+    * truncates the growing lineage so round N's plan does not replay
+    * rounds 1..N-1.
     * (At extreme graph scale the alternating large-star/small-star variant
     * [Kiveris et al., CC in MapReduce] halves the round count; plain min
     * propagation keeps the per-round plan to stock joins which AQE handles.)
@@ -117,9 +118,6 @@ object Dedup {
     * action. Build the pairs DataFrame lazily as usual; invoke this at
     * execution time.
     *
-    * @param checkpointDir reliable-checkpoint directory for cluster-scale
-    *        runs — per-round pins survive executor loss ([[Checkpoints]]);
-    *        None = localCheckpoint (fast, fails loudly on executor loss).
     * @return one row per node that appears in any pair: (id, comp) where
     *         comp is the minimum id of the node's component.
     */
@@ -127,14 +125,12 @@ object Dedup {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     // Round pins are LAZY: the changed-count probe below both materializes
     // the pinned round AND returns the fixpoint test — one action per
     // round, not a checkpoint job followed by a probe job. (Lazy pins are
     // safe to release here because every round IS materialized by its
     // probe before the next round supersedes it.)
-    val pinLazy = Checkpoints.pinner(pairs.sparkSession, checkpointDir, eager = false)
     // Edge table pinned LAZILY and HASH-PARTITIONED ON dst: every round's
     // propagation join probes edges by dst against the node-sized labels,
     // so pre-partitioning the pinned artifact means rounds re-exchange only
@@ -143,12 +139,12 @@ object Dedup {
     // paying a standalone eager-checkpoint job — on a pair graph fed by a
     // whole candidate pipeline (minhash/simhash verify) that job was a full
     // extra barrier.
-    val edges = pinLazy(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val edges = Checkpoints.pin(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
-      .repartition(col("dst")))
-    var labels = pinLazy(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp")))
+      .repartition(col("dst")), eager = false)
+    var labels = Checkpoints.pin(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")), eager = false)
     val idType = edges.select(col("src")).schema.head.dataType
     var converged = false
     var iter      = 0
@@ -166,10 +162,11 @@ object Dedup {
           col("dst") === col("id"))
         .select(col("src").as("id"), col("comp"),
           lit(null).cast(idType).as("pm"))
-      val next = pinLazy(labels
+      val next = Checkpoints.pin(labels
         .select(col("id"), col("comp"), col("comp").as("pm"))
         .union(prop)
-        .groupBy(col("id")).agg(min(col("comp")).as("comp"), max(col("pm")).as("pm")))
+        .groupBy(col("id")).agg(min(col("comp")).as("comp"), max(col("pm")).as("pm")),
+        eager = false)
       // NULL-safe inequality: a node whose id (and so initial label) is NULL
       // keeps the old fixpoint semantics — <=> treats NULL = NULL as equal.
       val changed = next.filter(!(col("comp") <=> col("pm"))).count()
@@ -197,10 +194,9 @@ object Dedup {
     * graphs whose diameter may exceed propagation's round budget.
     */
   def nearDupSurvivors(pairs: DataFrame, aCol: String, bCol: String,
-      useStar: Boolean = false, maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val cc = if (useStar) connectedComponentsStar(pairs, aCol, bCol, maxIter, checkpointDir)
-             else connectedComponents(pairs, aCol, bCol, maxIter, checkpointDir)
+      useStar: Boolean = false, maxIter: Int = 50): DataFrame = {
+    val cc = if (useStar) connectedComponentsStar(pairs, aCol, bCol, maxIter)
+             else connectedComponents(pairs, aCol, bCol, maxIter)
     cc.select(col("id").as("doc_id"), col("comp"), (col("id") === col("comp")).as("keep"))
   }
 
@@ -236,9 +232,9 @@ object Dedup {
     // lazily pinned: `up` feeds BOTH the union side and the anti-join key
     // probe — without the pin the keepLatest window (exchange + sort)
     // would execute once per consumer in the same action
-    val up = resolveBy.fold(updates)(o =>
+    val up = Checkpoints.pin(resolveBy.fold(updates)(o =>
       keepLatest(updates, keys, Seq(o),
-        Seq(xxhash64(updates.columns.map(col): _*)))).localCheckpoint(false)
+        Seq(xxhash64(updates.columns.map(col): _*)))), eager = false)
     // resolveBy already guarantees one row per key; only the raw-updates
     // path needs the distinct on the probe side
     val probe = up.select(keys.map(col): _*)
@@ -297,7 +293,7 @@ object Dedup {
     *
     * Per round: two self-aggregating joins over the edge list (no node
     * labels carried between rounds — the edge list IS the state), with
-    * `localCheckpoint` truncating lineage. Convergence = the normalized
+    * a [[Checkpoints.pin]] truncating lineage. Convergence = the normalized
     * edge set reaches a fixpoint, tested exactly with a one-sided
     * `except` (the round can only shrink-or-equal the set; see loop).
     */
@@ -305,16 +301,14 @@ object Dedup {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val pin = Checkpoints.pinner(pairs.sparkSession, checkpointDir)
+      maxIter: Int = 50): DataFrame = {
     def normalize(df: DataFrame): DataFrame = df
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    val nodes = pin(pairs.select(col(aCol).as("n"))
+    val nodes = Checkpoints.pin(pairs.select(col(aCol).as("n"))
       .union(pairs.select(col(bCol).as("n"))).distinct())
-    var edges = pin(normalize(
+    var edges = Checkpoints.pin(normalize(
         pairs.select(col(aCol).as("a"), col(bCol).as("b"))))
     var converged = edges.isEmpty
     var iter      = 0
@@ -331,7 +325,7 @@ object Dedup {
       // SMALL-STAR on the normalized (u < v) form: v's smaller neighbors are
       // exactly its u-partners; all of them and v itself re-attach to their min
       val mS = afterLarge.groupBy(col("v")).agg(min(col("u")).as("m"))
-      val afterSmall = pin(normalize(
+      val afterSmall = Checkpoints.pin(normalize(
         afterLarge.join(mS, "v").select(col("u").as("a"), col("m").as("b"))
           .union(mS.select(col("v").as("a"), col("m").as("b")))))
       converged = afterSmall.count() == edges.count() &&

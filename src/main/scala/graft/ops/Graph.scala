@@ -59,15 +59,11 @@ object Graph {
     * round, and — when `iterations <= pinEvery` ever left it live — the
     * round-0 ranks).
     *
-    * @param checkpointDir reliable-checkpoint directory for cluster-scale
-    *        runs (survives executor loss); None = localCheckpoint.
     * @param pinEvery checkpoint interval in rounds (1 = every round).
     */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, dampingPct: Int = 85,
-      checkpointDir: Option[String] = None, pinEvery: Int = 1): DataFrame =
-    pageRankIntWithRounds(edges, srcCol, dstCol, iterations, dampingPct,
-      checkpointDir, pinEvery)._1
+      iterations: Int, dampingPct: Int = 85, pinEvery: Int = 1): DataFrame =
+    pageRankIntWithRounds(edges, srcCol, dstCol, iterations, dampingPct, pinEvery)._1
 
   /** [[pageRankInt]] plus the number of rounds actually run — the testable
     * surface of `converge` (GraphSpec asserts early halt and delta ≡ full).
@@ -96,8 +92,7 @@ object Graph {
     * mass table the caller believed final.
     */
   private[graft] def pageRankIntWithRounds(edges: DataFrame, srcCol: String,
-      dstCol: String, iterations: Int, dampingPct: Int = 85,
-      checkpointDir: Option[String] = None, pinEvery: Int = 1,
+      dstCol: String, iterations: Int, dampingPct: Int = 85, pinEvery: Int = 1,
       converge: Boolean = false): (DataFrame, Int) = {
     require(iterations >= 1 && iterations <= (if (converge) 100 else 20),
       "iterations in [1, 20] (fixed) / [1, 100] (converge ceiling)")
@@ -108,10 +103,8 @@ object Graph {
     // stats for checkpoint scans, falls back to sort-merge joins, and the
     // per-round sorts cost more than the stage-job round trips they save:
     // q198 3.2 → 4.7 s, q199 2.9 → 5–11 s warm.)
-    val pin = Checkpoints.pinner(edges.sparkSession, checkpointDir)
     // setup artifacts pin LAZILY: they feed exactly the next job, so an
     // eager pin would only add a standalone materialization barrier
-    val lazyPin = Checkpoints.pinner(edges.sparkSession, checkpointDir, eager = false)
     val es  = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val deg = es.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // converge mode re-pins the edge table hash-partitioned on src: its
@@ -138,15 +131,15 @@ object Graph {
     // artifact's own aggregate exchange; pageRank's `e` has no such
     // exchange to reuse.
     val eRaw = es.join(deg, Seq("src"))
-    val e    = lazyPin(if (converge) eRaw.repartition(col("src")) else eRaw)
+    val e    = Checkpoints.pin(if (converge) eRaw.repartition(col("src")) else eRaw, eager = false)
     val base = 1000000L * (100 - dampingPct) / 100
     // round-0 ranks IS the node set at uniform mass — one pinned artifact
     // (it feeds two consumers per round: the contribution join and the
     // base-term union), not separate nodes + ranks copies
-    var ranks = lazyPin(e.select(col("src").as("v"))
+    var ranks = Checkpoints.pin(e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v")))
       .distinct()
-      .select(col("v"), lit(1000000L).as("m")))
+      .select(col("v"), lit(1000000L).as("m")), eager = false)
     var lastPinnedRanks = ranks // only ever release a PINNED artifact
     val nodeCount = if (converge) ranks.count() else 0L
     var changedPrev: Option[DataFrame] = None
@@ -187,9 +180,9 @@ object Graph {
       val pmNull = lit(null).cast("long").as("pm")
       val next =
         if (useDelta) {
-          val affected = lazyPin(
+          val affected = Checkpoints.pin(
             e.join(changedPrev.get, col("src") === col("cv"), "left_semi")
-              .select(col("dst")).distinct())
+              .select(col("dst")).distinct(), eager = false)
           roundPin = Some(affected)
           val updated = e
             .join(affected, Seq("dst"), "left_semi")
@@ -235,9 +228,9 @@ object Graph {
       if (converge) {
         // CC's round shape: lazy pins; the changed-count probe is the
         // round's one action and materializes both as its side effect
-        val pinned = lazyPin(next)
-        val chg = lazyPin(
-          pinned.filter(col("m") =!= col("pm")).select(col("v").as("cv")))
+        val pinned = Checkpoints.pin(next, eager = false)
+        val chg = Checkpoints.pin(
+          pinned.filter(col("m") =!= col("pm")).select(col("v").as("cv")), eager = false)
         changedCount = chg.count()
         fixed = changedCount == 0L
         if (lastPinnedRanks ne null) Checkpoints.release(lastPinnedRanks)
@@ -247,7 +240,7 @@ object Graph {
         lastPinnedRanks = pinned
         ranks = pinned.select(col("v"), col("m"))
       } else if (iter < iterations && iter % pinEvery == 0) {
-        val pinned = pin(next)
+        val pinned = Checkpoints.pin(next)
         Checkpoints.release(lastPinnedRanks) // superseded — don't pin O(rounds) copies
         lastPinnedRanks = pinned
         ranks = pinned
@@ -300,10 +293,8 @@ object Graph {
     * an unpinned unroll double per round — measured 2.5× wall at sf0.1).
     */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
-      iterations: Int, checkpointDir: Option[String] = None,
-      pinEvery: Int = 1, converge: Boolean = false): DataFrame =
-    labelPropagationWithRounds(pairs, aCol, bCol, iterations, checkpointDir,
-      pinEvery, converge)._1
+      iterations: Int, pinEvery: Int = 1, converge: Boolean = false): DataFrame =
+    labelPropagationWithRounds(pairs, aCol, bCol, iterations, pinEvery, converge)._1
 
   /** [[labelPropagation]] plus the number of rounds actually run — the
     * testable surface of `converge` (GraphSpec asserts early halt and the
@@ -332,15 +323,13 @@ object Graph {
     * fixed-round semantics remain available as `converge = false`.
     */
   private[graft] def labelPropagationWithRounds(pairs: DataFrame, aCol: String,
-      bCol: String, iterations: Int, checkpointDir: Option[String] = None,
-      pinEvery: Int = 1, converge: Boolean = false): (DataFrame, Int) = {
+      bCol: String, iterations: Int, pinEvery: Int = 1,
+      converge: Boolean = false): (DataFrame, Int) = {
     require(iterations >= 1 && iterations <= 20, "iterations in [1, 20]")
     require(pinEvery >= 1 && pinEvery <= 5, "pinEvery in [1, 5]")
-    val lazyPin = Checkpoints.pinner(pairs.sparkSession, checkpointDir, eager = false)
-    val pin     = Checkpoints.pinner(pairs.sparkSession, checkpointDir)
     // A SHORT fixed unroll (iterations <= pinEvery) runs as ONE job, so the
     // setup pins — each a sequential construction-time barrier of 3–4 AQE
-    // stage jobs (a lazy localCheckpoint materializes every stage below the
+    // stage jobs (a lazy pin materializes every stage below the
     // final one when it hands out its RDD) — are skipped: inside the single
     // job, ReuseExchange dedups the duplicated subtrees and independent
     // stages materialize concurrently. Converge mode and long unrolls keep
@@ -348,7 +337,7 @@ object Graph {
     // where exchange reuse cannot span). Same device as pageRankInt.
     val onePass = !converge && iterations <= pinEvery
     val setupPin: DataFrame => DataFrame =
-      if (onePass) identity else lazyPin
+      if (onePass) identity else Checkpoints.pin(_, eager = false)
     val p0 = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     // node set from EVERY endpoint (self-loops included) — the voting edge
     // set drops self-loops, but that must not delete the node itself
@@ -358,7 +347,7 @@ object Graph {
     // rounds are separate jobs (the changed-count probe is a per-round
     // action), and exchange reuse cannot span jobs — without the layout,
     // every round-job re-exchanges the full edge set for the votes join.
-    // localCheckpoint preserves the partitioning in the plan, so converge
+    // The pin preserves the partitioning in the plan, so converge
     // rounds exchange only the node-sized labels side. Fixed-round mode
     // deliberately SKIPS the repartition: the whole unroll is ONE job and
     // ReuseExchange already dedups the identical edge-shuffle subtrees, so
@@ -405,9 +394,9 @@ object Graph {
       var batchedMid = false
       val next =
         if (useDelta) {
-          val affected = lazyPin(
+          val affected = Checkpoints.pin(
             edges.join(changedPrev.get, col("src") === col("cv"), "left_semi")
-              .select(col("dst")).distinct())
+              .select(col("dst")).distinct(), eager = false)
           roundPin = Some(affected)
           val updated = edges
             .join(affected, Seq("dst"), "left_semi")
@@ -444,7 +433,7 @@ object Graph {
           // checkpoint boundary exchange reuse cannot dedup the recompute —
           // then released right after the probe materializes it.
           if (converge && rounds + 2 <= iterations) {
-            val mid = lazyPin(voteRound(labels, i == 1))
+            val mid = Checkpoints.pin(voteRound(labels, i == 1), eager = false)
             roundPin = Some(mid)
             diffBase = mid
             batchedMid = true
@@ -460,11 +449,11 @@ object Graph {
         // aggregate, and pushing voter-sized sentinel rows through the
         // vote exchange cost more than the node-wide co-partitioned diff
         // join it replaced.)
-        val pinned = lazyPin(next)
-        val chg = lazyPin(pinned.as("n")
+        val pinned = Checkpoints.pin(next, eager = false)
+        val chg = Checkpoints.pin(pinned.as("n")
           .join(diffBase.as("p"), col("n.v") === col("p.v"))
           .filter(col("n.label") =!= col("p.label"))
-          .select(col("n.v").as("cv")))
+          .select(col("n.v").as("cv")), eager = false)
         changedCount = chg.count()
         fixed = changedCount == 0L
         lastPinned.foreach(Checkpoints.release)
@@ -478,7 +467,7 @@ object Graph {
         // a short unroll (iterations <= pinEvery) runs as ONE job with no
         // mid-loop materialization barrier; lineage depth pinEvery is the
         // documented recovery bound
-        val pinned = pin(next)
+        val pinned = Checkpoints.pin(next)
         lastPinned.foreach(Checkpoints.release) // superseded round
         lastPinned = Some(pinned)
         labels = pinned
@@ -572,23 +561,21 @@ object Graph {
     */
   private def closedWedges(edges: DataFrame, srcCol: String, dstCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val und = edges
+    // three consumers (degree agg + both sides of the wedge machinery):
+    // pin the canonical edge set instead of repeating the distinct
+    val und = Checkpoints.pin(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-      // three consumers (degree agg + both sides of the wedge machinery):
-      // pin the canonical edge set instead of repeating the distinct
-      .localCheckpoint(false)
+      .distinct(), eager = false)
     val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     val low = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val oriented = und
+    val oriented = Checkpoints.pin(und
       .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
       .select(when(low, col("a")).otherwise(col("b")).as("u"),
-        when(low, col("b")).otherwise(col("a")).as("w"))
-      .localCheckpoint(false)
+        when(low, col("b")).otherwise(col("a")).as("w")), eager = false)
     val wedges = oriented.select(col("u"), col("w").as("x"))
       .join(oriented.select(col("u"), col("w").as("y")), Seq("u"))
       .filter(col("x") =!= col("y"))

@@ -398,7 +398,7 @@ object Multimodal {
     // checkpoint read as pure overhead (the 2 s it "cost" was the pushed
     // decode itself). Fenced, the pin is a cheap wide job and both
     // self-join sides read its blocks (decode exactly once).
-    bandRows(hashed, nBits, maxHamming).localCheckpoint(false)
+    Checkpoints.pin(bandRows(hashed, nBits, maxHamming), eager = false)
 
   /** `(id, h)` decoded-audio dHash rows — the shared head of
     * [[audioNearDupPairs]] and [[audioBandOccupancy]].
@@ -513,7 +513,7 @@ object Multimodal {
     require(maxBucket >= 1, "maxBucket must be positive")
     val bands = maxHamming + 1
     val width = (nBits + bands - 1) / bands
-    val banded = bandRowsWide(hashed, nBits, maxHamming).localCheckpoint(false)
+    val banded = Checkpoints.pin(bandRowsWide(hashed, nBits, maxHamming), eager = false)
     def pairs(idx: DataFrame, extra: Column): DataFrame = idx.as("x")
       .join(idx.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
@@ -939,11 +939,10 @@ object Multimodal {
     * contract as [[graft.ops.Text.compactMinhashIndex]].
     */
   def compactDHashIndex(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, buckets: Int,
-      checkpointDir: Option[String] = None): Unit =
+      tablePrefix: String, buckets: Int): Unit =
     Storage.tombstonesOf(spark, s"${tablePrefix}_del").foreach { del =>
-      val pin = Checkpoints.pinner(spark, checkpointDir, eager = true)
-      val keep = pin(spark.table(s"${tablePrefix}_idx").join(del, Seq("id"), "left_anti"))
+      val keep = Checkpoints.pin(
+        spark.table(s"${tablePrefix}_idx").join(del, Seq("id"), "left_anti"))
       Storage.writeBucketed(keep.select(col("id"), col("h"), col("band"), col("key")),
         s"${tablePrefix}_idx", Seq("band", "key"), buckets, "overwrite")
       Storage.clearTombstones(spark, s"${tablePrefix}_del")

@@ -263,8 +263,7 @@ object Sampling {
     // pinned: the counts aggregate feeds the grand total, the normalizer
     // fold, and the report — recompute would scan the corpus three times
     // (see Summaries.chiSquareCells for the rationale)
-    val counts = df.groupBy(col(srcCol)).agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+    val counts = Checkpoints.pin(df.groupBy(col(srcCol)).agg(count(lit(1)).as("n")), eager = false)
     val tot = counts.agg(sum(col("n")).as("__N"))
     val withT = counts.crossJoin(broadcast(tot))
       .withColumn("__p", col("n").cast("double") / col("__N").cast("double"))

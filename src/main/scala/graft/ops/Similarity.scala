@@ -578,9 +578,8 @@ object Similarity {
     // they pin (batch-sized; the collect is the materializing action)
     val (cb, ids, vecs) = readPqModel(spark, tablePrefix)
     val clean = batch.filter(col(vecCol).isNotNull && size(col(vecCol)) === cb.dim)
-    val probes = assignCellsWith(clean, idCol, vecCol, ids, vecs, nProbe)
-      .select(col("cell"), col("id").as("probe_id"), col("v").as("pv"))
-      .localCheckpoint(false)
+    val probes = Checkpoints.pin(assignCellsWith(clean, idCol, vecCol, ids, vecs, nProbe)
+      .select(col("cell"), col("id").as("probe_id"), col("v").as("pv")), eager = false)
     val idx0 = spark.table(s"${tablePrefix}_idx")
     val idx = Storage.tombstonesOf(spark, s"${tablePrefix}_del")
       .fold(idx0)(del => idx0.join(del, Seq("id"), "left_anti"))
@@ -642,23 +641,22 @@ object Similarity {
     * minus the deleted ids (bucketing preserved) and reset the tombstone
     * table. The model tables are NOT touched — the remaining codes were
     * encoded and routed under the frozen model and stay valid. Kept rows
-    * are pinned before the overwrite; `checkpointDir` selects a reliable
-    * pin ([[graft.ops.Checkpoints]]). A maintenance-window operation, not
-    * safe under concurrent searches of the same prefix. No-op when no
-    * deletes are pending.
+    * are pinned before the overwrite ([[graft.ops.Checkpoints]]). A
+    * maintenance-window operation, not safe under concurrent searches of
+    * the same prefix. No-op when no deletes are pending.
     */
-  def compactPqIndex(spark: SparkSession, tablePrefix: String, buckets: Int,
-      checkpointDir: Option[String] = None): Unit =
+  def compactPqIndex(spark: SparkSession, tablePrefix: String, buckets: Int): Unit =
     Storage.tombstonesOf(spark, s"${tablePrefix}_del").foreach { del =>
-      val pin = Checkpoints.pinner(spark, checkpointDir, eager = true)
-      val keep = pin(spark.table(s"${tablePrefix}_idx").join(del, Seq("id"), "left_anti"))
+      val keep = Checkpoints.pin(
+        spark.table(s"${tablePrefix}_idx").join(del, Seq("id"), "left_anti"))
       Storage.writeBucketed(keep.select(col("cell"), col("id"), col("codes")),
         s"${tablePrefix}_idx", Seq("cell"), buckets, "overwrite")
       // a refine store compacts alongside: its deleted rows were already
       // unreachable (the code phase anti-joins tombstones before refine),
       // so this is storage reclamation, not a correctness step
       if (spark.catalog.tableExists(s"${tablePrefix}_vecs")) {
-        val keepV = pin(spark.table(s"${tablePrefix}_vecs").join(del, Seq("id"), "left_anti"))
+        val keepV = Checkpoints.pin(
+          spark.table(s"${tablePrefix}_vecs").join(del, Seq("id"), "left_anti"))
         Storage.writeBucketed(keepV.select(col("cell"), col("id"), col("v")),
           s"${tablePrefix}_vecs", Seq("cell"), buckets, "overwrite")
         Checkpoints.release(keepV)

@@ -260,9 +260,7 @@ object Storage {
     val idx = idxOf(cols.indices.map(i => col(s"__zb_$i")))
     // pinned: RangePartitioner's sampling job would otherwise re-execute
     // the whole binning subtree a second time (see exactQuantileArrays)
-    val pinned = binned
-      .withColumn("__z", idx)
-      .localCheckpoint(false)
+    val pinned = Checkpoints.pin(binned.withColumn("__z", idx), eager = false)
     try
       pinned
         .repartitionByRange(nFiles, col("__z"))

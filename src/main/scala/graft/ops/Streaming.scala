@@ -158,7 +158,7 @@ object Streaming {
           .filter(!col("keep")).select(col("doc_id").as("__loser"))
         val withinSurv = batch.join(losers,
           batch(idCol) === col("__loser"), "left_anti")
-        val fresh = Checkpoints.pinner(spark, None)(
+        val fresh = Checkpoints.pin(
           if (spark.catalog.tableExists(s"${indexPrefix}_sig"))
             Text.minhashDedupAgainstIndex(
               withinSurv, idCol, textCol, nShingle, k, threshold, indexPrefix)
@@ -231,7 +231,7 @@ object Streaming {
           .filter(!col("keep")).select(col("doc_id").as("__loser"))
         val withinSurv = batch.join(losers,
           batch(idCol) === col("__loser"), "left_anti")
-        val fresh = Checkpoints.pinner(spark, None)(
+        val fresh = Checkpoints.pin(
           if (spark.catalog.tableExists(s"${indexPrefix}_idx")) dedupOf(withinSurv)
           else withinSurv)
         TxTable.append(spark, corpusDir, fresh,
@@ -547,12 +547,11 @@ object Streaming {
         // pinned: the commit stages counts and alerts as two independent
         // plans that share this subtree — without the pin each batch would
         // read the previous snapshot and aggregate the micro-batch TWICE
-        val merged = (
+        val merged = Checkpoints.pin(
           if (TxTable.exists(spark, root, "counts"))
             TxTable.read(spark, root, "counts").unionByName(delta)
               .groupBy(col("event_type"), col("day")).agg(sum(col("n")).as("n"))
-          else delta
-        ).localCheckpoint(true)
+          else delta)
         try {
           val trail = org.apache.spark.sql.expressions.Window
             .partitionBy(col("event_type")).orderBy(col("day")).rowsBetween(-7, -1)

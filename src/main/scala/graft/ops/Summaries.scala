@@ -114,8 +114,8 @@ object Summaries {
     */
   def mutualInfoCells(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     // pinned: four consumers, same shape and rationale as [[chiSquareCells]]
-    val joint = df.groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+    val joint = Checkpoints.pin(df.groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("c")),
+      eager = false)
     val tot = joint.agg(sum(col("c")).as("__N"))
     val ma  = joint.groupBy(col(aCol)).agg(sum(col("c")).as("__ca"))
     val mb  = joint.groupBy(col(bCol)).agg(sum(col("c")).as("__cb"))
@@ -297,12 +297,11 @@ object Summaries {
     // device. The domain scan is NOT this operator's wall: the extra
     // exchange barrier cost more than the widened partial agg saved —
     // q94 0.71 → 1.51 s, q210 1.38 → 1.87 s settled.)
-    val domain = df
+    val domain = Checkpoints.pin(df
       .select(posexplode(array(specs.map(s => col(s._1).cast("double")): _*))
         .as(Seq("__ci", "__v")))
       .filter(col("__v").isNotNull)
-      .groupBy(col("__ci"), col("__v")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .groupBy(col("__ci"), col("__v")).agg(count(lit(1)).as("__c")), eager = false)
     // Contiguous range ids as a DETERMINISTIC row function — equi-width
     // buckets over each column's [min, max], from one tiny collected probe
     // of the pinned domain (the Storage stats-plan pattern). This replaces
@@ -473,7 +472,7 @@ object Summaries {
     * this: a plain per-key window already spreads across the cluster, and
     * the |keys|·nPart offsets table here would outgrow its broadcast.
     *
-    * The range exchange is pinned (lazy localCheckpoint) because BOTH the
+    * The range exchange is pinned (lazily) because BOTH the
     * running sums and the offsets aggregate must observe the SAME
     * spark_partition_id per row — a re-executed range partitioner
     * re-samples its boundaries and the pids silently desynchronize (the
@@ -487,13 +486,12 @@ object Summaries {
       order: Seq[Column], sums: Seq[(Column, String, String)],
       pinInput: Boolean = false): DataFrame = {
     require(order.nonEmpty && sums.nonEmpty, "need order and sum specs")
-    val in      = if (pinInput) df.localCheckpoint(false) else df
+    val in      = if (pinInput) Checkpoints.pin(df, eager = false) else df
     val nPart   = df.sparkSession.sparkContext.defaultParallelism
     val keyCols = keys.map(col)
-    val ranged = in
+    val ranged = Checkpoints.pin(in
       .repartitionByRange(nPart, (keyCols ++ order): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("__pid", spark_partition_id()), eager = false)
     val wLoc = Window.partitionBy((keyCols :+ col("__pid")): _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = sums.foldLeft(ranged) { case (acc, (e, run, _)) =>
@@ -659,8 +657,7 @@ object Summaries {
     require(topN >= 1, "topN must be positive")
     // pinned: consumed by both the totals aggregate and the report —
     // recompute would scan the input twice (see chiSquareCells)
-    val counts = df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+    val counts = Checkpoints.pin(df.groupBy(col(key)).agg(count(lit(1)).as("n")), eager = false)
     val totals = counts.agg(sum(col("n")).as("__total"), count(lit(1)).as("__k"))
     counts.crossJoin(broadcast(totals))
       .select(col(key), col("n"),
@@ -755,9 +752,9 @@ object Summaries {
     // the grid join) — exchange reuse does not reliably unify identical
     // subtrees (measured on the near-dup index), and recomputing joint
     // means re-scanning the corpus per consumer. Cardinality = observed
-    // (a, b) pairs. localCheckpoint trade-off: see Text.jaccardNearDupPairs.
-    val joint = df.groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+    // (a, b) pairs. Local vs reliable pins: see Checkpoints.
+    val joint = Checkpoints.pin(df.groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("c")),
+      eager = false)
     val tot = joint.agg(sum(col("c")).as("__N"))
     val ma  = joint.groupBy(col(aCol)).agg(sum(col("c")).as("__ca"))
     val mb  = joint.groupBy(col(bCol)).agg(sum(col("c")).as("__cb"))

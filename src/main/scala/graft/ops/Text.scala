@@ -300,10 +300,9 @@ object Text {
   private def bpeTrainDistributed(
       vocab: DataFrame, merges: Int): Seq[(Int, String, String, String, Long)] = {
     val spark = vocab.sparkSession
-    val pin = Checkpoints.pinner(spark, None)
     val merged = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var words = pin(vocab.select(col("s"), col("nw")))
-    var counts = pin(bpePairRows(words, 1)
+    var words = Checkpoints.pin(vocab.select(col("s"), col("nw")))
+    var counts = Checkpoints.pin(bpePairRows(words, 1)
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("cnt")))
     var r = 1
     var exhausted = false
@@ -319,14 +318,14 @@ object Text {
         // it into the counts table is ONE aggregate whose input is the
         // (small) counts table plus affected-word pair rows
         val affected = words.filter(col("s").contains(pat))
-        val newCounts = pin(counts
+        val newCounts = Checkpoints.pin(counts
           .select(col("a"), col("b"), col("cnt").as("w"))
           .unionByName(bpePairRows(
             affected.select(replace(col("s"), lit(pat), lit(rep)).as("s"), col("nw")), 1))
           .unionByName(bpePairRows(affected, -1))
           .groupBy(col("a"), col("b")).agg(sum(col("w")).as("cnt"))
           .filter(col("cnt") > 0))
-        val newWords = pin(words.select(
+        val newWords = Checkpoints.pin(words.select(
           replace(col("s"), lit(pat), lit(rep)).as("s"), col("nw")))
         Checkpoints.release(counts); Checkpoints.release(words)
         counts = newCounts; words = newWords
@@ -578,7 +577,7 @@ object Text {
     * Hamming distance on the full signature. Bit-exact cross-engine:
     * everything is integer arithmetic.
     *
-    * `maxBucket` / `checkpointDir`: same hot-bucket star bound and index
+    * `maxBucket`: same hot-bucket star bound and index
     * pinning as [[minhashNearDupPairs]] — a band bucket above `maxBucket`
     * members pairs everyone with its minimum id only (O(d) rows instead of
     * O(d²)), and the banded index is pinned once for its four consumers.
@@ -594,8 +593,7 @@ object Text {
       nBits: Int = 48,
       bands: Int = 3,
       maxHamming: Int = 8,
-      maxBucket: Int = Int.MaxValue,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     require(nBits % bands == 0, "bands must divide nBits")
     require(maxBucket >= 1, "maxBucket must be positive")
     val bandWidth = nBits / bands
@@ -604,13 +602,12 @@ object Text {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
     val sig = spread.select(col("id"),
       simhashOfSet(shinglesOf(col(textCol), nShingle), nBits).as("sig"))
-    val pin = Checkpoints.pinner(docs.sparkSession, checkpointDir, eager = false)
-    val ex = pin(sig
+    val ex = Checkpoints.pin(sig
       .select(col("id"), col("sig"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           p => call_function("shiftright", col("sig"), p * lit(bandWidth)).bitwiseAND(lit(mask))))
           .as(Seq("band", "bv")))
-      .repartition(col("band"), col("bv")))
+      .repartition(col("band"), col("bv")), eager = false)
     val ham = bit_count(col("sa").bitwiseXOR(col("sb")))
     def allPairs(idx: DataFrame): DataFrame = idx.as("a")
       .join(idx.as("b"),
@@ -699,12 +696,8 @@ object Text {
     * SQL oracles model. With the cap off the occupancy pass is skipped
     * entirely (the historical single self-join plan).
     *
-    * `checkpointDir`: the banded index is pinned (it feeds the occupancy
-    * count, both self-join sides, and the star branch). `None` pins with
-    * `localCheckpoint` — executor-local, an executor loss fails the job
-    * loudly; set a reliable dir for long corpus-scale runs, exactly as
-    * [[graft.ops.Graph.pageRankInt]] and
-    * [[graft.ops.Dedup.connectedComponents]] accept.
+    * The banded index is pinned ([[Checkpoints]]): it feeds the occupancy
+    * count, both self-join sides, and the star branch.
     */
   /** LSH band-bucket occupancy preflight — the report that tells an
     * operator whether [[minhashNearDupPairs]] needs its `maxBucket` bound
@@ -749,8 +742,7 @@ object Text {
       k: Int,
       threshold: Double,
       scopeCols: Seq[String] = Nil,
-      maxBucket: Int = Int.MaxValue,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxBucket >= 1, "maxBucket must be positive")
     // The signature pass is CPU-bound; a small parquet input arrives as ONE
     // split, which would serialize it. Spread the raw (id, text) rows across
@@ -773,10 +765,9 @@ object Text {
     // self-join sides, star branch); exchange reuse does not reliably unify
     // that many (see pairOverlaps), so pin the narrow (id, band, hv) rows
     // once — lazily, so the first consuming action materializes them.
-    val pin = Checkpoints.pinner(docs.sparkSession, checkpointDir, eager = false)
-    val sig = pin(sh
+    val sig = Checkpoints.pin(sh
       .select(col("id") +: posexplode(minhashSignatureOf(col("ss"), k)).as(Seq("band", "hv")) +: scope: _*)
-      .repartition(col("band") +: col("hv") +: scope: _*))
+      .repartition(col("band") +: col("hv") +: scope: _*), eager = false)
     val keyNames = Seq("band", "hv") ++ scopeCols
     val scopeEq = scopeCols.map(c => col(s"a.$c") === col(s"b.$c"))
       .foldLeft(lit(true))(_ && _)
@@ -855,9 +846,10 @@ object Text {
     * by masking k positions (index ~L^k/k! rows — practical for k ≤ 2).
     */
   def singleEditNearPairs(df: DataFrame, idCol: String, strCol: String): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(strCol).as("s"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism) // see minhashNearDupPairs
-      .localCheckpoint(false) // two consumers: the masked index + the exact-dup pass
+    // pinned: two consumers, the masked index + the exact-dup pass
+    val base = Checkpoints.pin(df.select(col(idCol).as("id"), col(strCol).as("s"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism), // see minhashNearDupPairs
+      eager = false)
     // The index rows CARRY the source string: the key column is short by
     // contract, so shipping it with each variant costs less than the two
     // extra joins a verify-time name re-fetch would need. Variants come
@@ -1077,17 +1069,15 @@ object Text {
     * full-build path — no corpus re-scan or re-shingling), and reset the
     * tombstone table. `k` must match the index's band count. The kept rows
     * are pinned before the overwrite (Spark refuses to overwrite a table
-    * its own input reads); pass `checkpointDir` for a reliable filesystem
-    * pin on corpus-scale runs ([[graft.ops.Checkpoints]]). Not safe under
+    * its own input reads; [[graft.ops.Checkpoints]]). Not safe under
     * concurrent searches of the same prefix — a maintenance-window
     * operation, like [[TxTable.compact]]. No pending tombstones → no-op.
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, k: Int, buckets: Int,
-      checkpointDir: Option[String] = None): Unit =
+      tablePrefix: String, k: Int, buckets: Int): Unit =
     Storage.tombstonesOf(spark, s"${tablePrefix}_del").foreach { del =>
-      val pin = Checkpoints.pinner(spark, checkpointDir, eager = true)
-      val keep = pin(spark.table(s"${tablePrefix}_sh").join(del, Seq("id"), "left_anti"))
+      val keep = Checkpoints.pin(
+        spark.table(s"${tablePrefix}_sh").join(del, Seq("id"), "left_anti"))
       Storage.writeBucketed(keep, s"${tablePrefix}_sh", Seq("id"), buckets, "overwrite")
       Storage.writeBucketed(
         keep.select(col("id"),
@@ -1117,8 +1107,7 @@ object Text {
       idCol: String,
       textCol: String,
       nShingle: Int,
-      maxDf: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDf: Int): DataFrame = {
     val spread = spreadIfNarrow(
       docs.select(col(idCol).as("id"), col(textCol))) // see minhashNearDupPairs
     val sh  = spread.select(col("id"), shinglesOf(col(textCol), nShingle).as("ss"))
@@ -1126,13 +1115,8 @@ object Text {
     // sides, both hot-overlap probes). Exchange reuse does not reliably
     // unify them (measured: 14 scans of the source in one run), so pin ONE
     // materialization: narrow (id, shingle) rows, cardinality = postings.
-    // The default pin is localCheckpoint — executor block storage, so an
-    // executor loss fails the job loudly (recompute impossible); pass
-    // `checkpointDir` for a reliable filesystem checkpoint on long
-    // corpus-scale runs (same knob as Graph.pageRankInt).
-    val pin = Checkpoints.pinner(docs.sparkSession, checkpointDir, eager = false)
-    val inv = pin(sh.select(col("id"), explode(col("ss")).as("s"))
-      .repartition(col("s")))
+    val inv = Checkpoints.pin(sh.select(col("id"), explode(col("ss")).as("s"))
+      .repartition(col("s")), eager = false)
     // Hot-shingle set via a partial-aggregated count on the co-partitioned
     // index (no extra exchange, no sort — a window over `s` would sort all
     // 750k index rows); the hot set is tiny by definition, so dropping it is
@@ -1162,7 +1146,7 @@ object Text {
     // exchange once — so it stays a lazy subplan instead of a pinned
     // artifact: the former pin materialized the operator's most expensive
     // stage as a standalone construction-time barrier (a lazy
-    // localCheckpoint runs every stage below the final one when it hands
+    // pin runs every stage below the final one when it hands
     // out its RDD), serializing it before the consumer's job could overlap
     // anything.
     val oRare = pairCounts(rare)
@@ -1207,10 +1191,9 @@ object Text {
       textCol: String,
       nShingle: Int,
       threshold: Double,
-      maxDf: Int = 500,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDf: Int = 500): DataFrame = {
     val j = col("o") / (col("ma") + col("mb") - col("o"))
-    pairOverlaps(docs, idCol, textCol, nShingle, maxDf, checkpointDir)
+    pairOverlaps(docs, idCol, textCol, nShingle, maxDf)
       .filter(j >= threshold)
       .select(col("doc_a"), col("doc_b"), Summaries.r4(j).as("jacc"))
   }
@@ -1232,11 +1215,10 @@ object Text {
       textCol: String,
       nShingle: Int,
       threshold: Double,
-      maxDf: Int = 500,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDf: Int = 500): DataFrame = {
     val ca = col("o") / col("ma")
     val cb = col("o") / col("mb")
-    pairOverlaps(docs, idCol, textCol, nShingle, maxDf, checkpointDir)
+    pairOverlaps(docs, idCol, textCol, nShingle, maxDf)
       .filter(greatest(ca, cb) >= threshold)
       .select(col("doc_a"), col("doc_b"), col("o"),
         Summaries.r4(ca).as("cont_a"), Summaries.r4(cb).as("cont_b"))
@@ -1290,7 +1272,7 @@ object Text {
     // df falls out of tf: one row per (doc, term) already — a second
     // explode + distinct scan of the corpus would recompute exactly this,
     // and sharing the subtree lets AQE reuse the tf exchange. NOT pinned:
-    // a localCheckpoint here would execute the aggregate's stages at plan-
+    // a pin here would execute the aggregate's stages at plan-
     // construction time (AQE materializes stages when the RDD is created),
     // breaking the lazy-plan contract this operator's PlanSpec test pins.
     val tf   = toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -1529,9 +1511,8 @@ object Text {
     // histogram pass over every character is the operator's real cost
     // (measured: recompute-per-consumer is ~1.7× slower than pinning), so
     // pin ONE materialization — cardinality is distinct-bigrams-per-doc,
-    // the compressed form. localCheckpoint: executor-local blocks; loss
-    // fails loudly, see jaccardNearDupPairs.
-    val db = docCharBigramCounts(docs, idCol, textCol).localCheckpoint(false)
+    // the compressed form.
+    val db = Checkpoints.pin(docCharBigramCounts(docs, idCol, textCol), eager = false)
     // corpus model: bigram counts + context (first-char) totals — vocabulary-
     // sized, re-aggregated from the compressed (doc, bigram) counts
     val cab = db.groupBy(col("bg")).agg(sum(col("c_db")).as("c_ab"))

@@ -119,16 +119,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connectedComponents: reliable-checkpoint path matches localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-    try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (4L, 5L), (5L, 3L)).toDF("a", "b")
-      val local    = Dedup.connectedComponents(pairs, "a", "b").as[(Long, Long)].collect().toMap
-      val reliable = Dedup.connectedComponents(pairs, "a", "b", checkpointDir = Some(dir))
-        .as[(Long, Long)].collect().toMap
-      assert(reliable == local)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (4L, 5L), (5L, 3L)).toDF("a", "b")
+    val (local, reliable, wrote) = TestSpark.localAndReliable(
+      Dedup.connectedComponents(pairs, "a", "b").as[(Long, Long)].collect().toMap)
+    assert(reliable == local)
+    assert(wrote > 0, "reliable checkpoint wrote no files")
   }
 
   test("connectedComponents fails loudly when maxIter is too small for the diameter") {

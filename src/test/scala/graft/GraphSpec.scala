@@ -98,20 +98,11 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("pageRankInt: reliable-checkpoint path matches localCheckpoint bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-    try {
-      val edges = (1L to 100L).map(i => (s"n$i", s"n${i * 3 % 100 + 1}")).distinct.toDF("s", "t")
-      val local    = Graph.pageRankInt(edges, "s", "t", 3).as[(String, Long)].collect().toSeq
-      val reliable = Graph.pageRankInt(edges, "s", "t", 3, checkpointDir = Some(dir))
-        .as[(String, Long)].collect().toSeq
-      assert(reliable == local)
-      // the reliable path actually wrote checkpoint data to the dir
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "reliable checkpoint wrote no files")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val edges = (1L to 100L).map(i => (s"n$i", s"n${i * 3 % 100 + 1}")).distinct.toDF("s", "t")
+    val (local, reliable, wrote) = TestSpark.localAndReliable(
+      Graph.pageRankInt(edges, "s", "t", 3).as[(String, Long)].collect().toSeq)
+    assert(reliable == local)
+    assert(wrote > 0, "reliable checkpoint wrote no files")
   }
 
   test("labelPropagation matches an in-memory reference (sync rounds, min-label ties)") {
