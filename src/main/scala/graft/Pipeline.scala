@@ -15,26 +15,25 @@ import graft.ops._
   * must exist before a plan does), then everything through the catalog is
   * ONE lazy plan per output table — Catalyst fuses the whole normalize chain
   * into the scan stage, and the only shuffles are the dedup window and the
-  * two group-by summaries.
+  * two group-by summaries. The exports run the catalog's tables as
+  * concurrent jobs through [[Concurrent.all]] (they are independent actions;
+  * one after another, the scheduler idles between small jobs), and a
+  * failure in one cancels the others.
   */
 object Pipeline {
 
   /** S1/S2 — raw positional rows (an Excel sheet read header-less; any cell
     * may be null) → typed DataFrame: detect the header row against the
     * sentinel set, re-header, prune all-null rows/columns, normalize names.
+    * Everything before `createDataFrame` runs on the driver, which already
+    * holds every row, so pruning costs no Spark job.
     */
   def ingestRaw(spark: SparkSession, rows: Seq[Seq[Any]]): DataFrame = {
-    val idx            = Ingest.detectHeaderIndex(rows)
-    val (names, data)  = Ingest.reHeader(rows, idx)
-    val width          = names.length
+    val (header, body) = Ingest.reHeader(rows, Ingest.detectHeaderIndex(rows))
+    val (names, data)  = Ingest.dropEmpty(header, body)
     val schema = StructType(names.map(n => StructField(n, StringType, nullable = true)))
-    val padded = data.map { r =>
-      val cells = r.map(v => if (v == null) null else v.toString).padTo(width, null)
-      Row.fromSeq(cells.take(width))
-    }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(padded.toIndexedSeq), schema)
-    Ingest.dropAllNullColumns(Ingest.dropAllNullRows(df))
+    val cells  = data.map(r => Row.fromSeq(r.map(v => if (v == null) null else v.toString)))
+    spark.createDataFrame(spark.sparkContext.parallelize(cells.toIndexedSeq), schema)
   }
 
   /** Per-upload normalization (`parse_cortex_excel`, `app.py:165-216`):
@@ -97,25 +96,37 @@ object Pipeline {
     scala.collection.immutable.ListMap(catalog.toSeq: _*)
   }
 
+  /** Run `f` over every catalog table concurrently ([[Concurrent.all]]):
+    * the tables are independent jobs over one shared plan, so the scheduler
+    * overlaps them instead of idling between small jobs. Results come back
+    * in catalog order.
+    */
+  private def eachTable[T](catalog: Map[String, DataFrame])(f: (String, DataFrame) => T): Seq[T] =
+    catalog.headOption.fold(Seq.empty[T]) { case (_, df) =>
+      Concurrent.all(df.sparkSession)(catalog.toSeq.map { case (name, t) => () => f(name, t) })
+    }
+
   /** S6 — multi-table export of a named catalog (the engine-side contract of
     * the reference's multi-sheet workbook, `df_to_xlsx_bytes` `app.py:35-134`;
     * formatting is presentation-layer, deliberately out of engine scope).
+    * The tables are written concurrently; on a failure the other writes are
+    * cancelled and the first error is rethrown.
     */
   def exportCatalog(catalog: Map[String, DataFrame], dir: String, format: String = "parquet"): Unit =
-    catalog.foreach { case (name, df) =>
+    eachTable(catalog) { (name, df) =>
       df.write.mode("overwrite").format(format).save(s"$dir/$name")
     }
 
   /** S6 at scale — partitioned parquet export: one directory tree per table,
     * hive-partitioned by the given columns (per-table). Partition pruning on
     * read is what makes a 100 TB result set addressable; the flat form above
-    * is for small catalogs.
+    * is for small catalogs. Tables are written concurrently, as above.
     */
   def exportCatalogPartitioned(
       catalog: Map[String, DataFrame],
       dir: String,
       partitionCols: Map[String, Seq[String]]): Unit =
-    catalog.foreach { case (name, df) =>
+    eachTable(catalog) { (name, df) =>
       val w = df.write.mode("overwrite")
       partitionCols.get(name).filter(_.nonEmpty).fold(w)(cs => w.partitionBy(cs: _*))
         .parquet(s"$dir/$name")
@@ -133,10 +144,11 @@ object Pipeline {
     * export; [[exportCatalog]] (parquet per table) is the 100 TB sink.
     * Header row first; cells keep their JVM types so [[Excel.writeRaw]] can
     * apply the reference's number formats and width sampling
-    * (`app.py:72-99`); sheet names truncated like `app.py:55`.
+    * (`app.py:72-99`); sheet names truncated like `app.py:55`. The tables
+    * are collected concurrently; sheets are written in catalog order.
     */
   def exportCatalogXlsx(catalog: Map[String, DataFrame], path: String): Unit = {
-    val sheets = catalog.toSeq.map { case (name, df) =>
+    val sheets = eachTable(catalog) { (name, df) =>
       val header: Seq[Any] = df.columns.toSeq
       val rows = df.collect().toSeq.map(r =>
         (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i)))

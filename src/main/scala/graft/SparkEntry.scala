@@ -35,37 +35,6 @@ object SparkEntry {
   /** ORC round-trip dirs already written by THIS JVM (q218). */
   private val orcWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Build INDEPENDENT query subtrees concurrently (guide §2.6: Spark's
-    * scheduler happily runs several jobs at once — actions are only
-    * sequential because driver code calls them sequentially). The pinning
-    * operators in this engine block at CONSTRUCTION time on AQE stage
-    * materialization (a lazy `localCheckpoint` runs every stage below the
-    * final one), so two independent pipelines built on one thread pay all
-    * their 10–60 ms stage-materialization round trips back to back — the
-    * measured "driver-barrier wall" that dominates the short-query suite.
-    * Built on two threads, each pipeline's stage jobs back-fill the
-    * scheduler gaps and task-tail idle slots the other leaves. Spark's
-    * job-group/call-site locals are InheritableThreadLocal, so child jobs
-    * stay attributable; failures rethrow on the caller. This changes only
-    * WHEN the same jobs run, never what any of them computes.
-    */
-  private def concurrently(thunks: (() => DataFrame)*): Seq[DataFrame] = {
-    val results = new Array[Either[Throwable, DataFrame]](thunks.size)
-    val threads = thunks.zipWithIndex.map { case (th, i) =>
-      val tr = new Thread(
-        () => results(i) = try Right(th()) catch { case e: Throwable => Left(e) },
-        s"graft-subtree-$i")
-      tr.setDaemon(true)
-      tr.start()
-      tr
-    }
-    threads.foreach(_.join())
-    results.toSeq.map {
-      case Right(df) => df
-      case Left(e)   => throw e
-    }
-  }
-
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     baseQueries ++ textQueries ++ similarityQueries ++ closureQueries
@@ -3398,13 +3367,13 @@ object SparkEntry {
       // stage aggregates it already has everything for — compute those
       // concurrently (guide §2.6, see q162); both are 1-row pins. Same
       // aggregates over the same rows; only the scheduling overlaps.
-      val Seq(dropped, s12) = concurrently(
+      val Seq(dropped, s12) = Concurrent.all(s)(Seq(
         () => Checkpoints.pin(Dedup.nearDupSurvivors(
             Text.minhashNearDupPairs(exact, "doc_id", "text", 3, 16, 0.5),
             "doc_a", "doc_b")
           .filter(!col("keep")).select(col("doc_id"))),
         () => Checkpoints.pin(stage("1_raw", docs)
-          .unionByName(stage("2_exact", exact))))
+          .unionByName(stage("2_exact", exact)))))
       val fuzzy = exact.join(dropped, Seq("doc_id"), "left_anti")
       s12
         .unionByName(stage("3_fuzzy", fuzzy))
@@ -3490,16 +3459,17 @@ object SparkEntry {
     "q162_lsh_recall_eval" -> ((s, d) => {
       val docs = t(s, d, "documents").filter(col("lang") === "en")
       // The exact and LSH pipelines are INDEPENDENT subtrees over the same
-      // corpus slice; built sequentially they paid both pipelines' pin/stage
-      // barriers back to back (guide §2.6). Each side's verified pair set is
-      // tiny (hundreds of rows) and is eagerly pinned inside its thread, so
-      // the final recall/precision assembly reads two pinned row sets. Same
-      // pairs, same arithmetic — only the build overlaps.
-      val Seq(exact, lsh) = concurrently(
+      // corpus slice. Their pins block at CONSTRUCTION time on stage
+      // materialization, so built sequentially they paid both pipelines'
+      // pin/stage barriers back to back (guide §2.6). Each side's verified
+      // pair set is tiny (hundreds of rows) and is eagerly pinned inside its
+      // thread, so the final recall/precision assembly reads two pinned row
+      // sets. Same pairs, same arithmetic — only the build overlaps.
+      val Seq(exact, lsh) = Concurrent.all(s)(Seq(
         () => Checkpoints.pin(Text.jaccardNearDupPairs(docs, "doc_id", "text", 3, 0.5)
           .select(col("doc_a"), col("doc_b"))),
         () => Checkpoints.pin(Text.minhashNearDupPairs(docs, "doc_id", "text", 3, 16, 0.5)
-          .select(col("doc_a"), col("doc_b"))))
+          .select(col("doc_a"), col("doc_b")))))
       val both = exact.intersect(lsh)
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
@@ -3560,11 +3530,11 @@ object SparkEntry {
       // The two pipelines are independent subtrees — built concurrently so
       // their pin/stage barriers overlap (guide §2.6, see q162); each pair
       // set is tiny and eagerly pinned inside its thread.
-      val Seq(exact, capped) = concurrently(
+      val Seq(exact, capped) = Concurrent.all(s)(Seq(
         () => Checkpoints.pin(Text.jaccardNearDupPairs(corpus, "doc_id", "text", 3, 0.5,
             maxDf = 5000).select(col("doc_a"), col("doc_b"))),
         () => Checkpoints.pin(Text.minhashNearDupPairs(corpus, "doc_id", "text", 3, 16, 0.5,
-            maxBucket = 64).select(col("doc_a"), col("doc_b"))))
+            maxBucket = 64).select(col("doc_a"), col("doc_b")))))
       def dupDocs(p: DataFrame) =
         p.select(explode(array(col("doc_a"), col("doc_b"))).as("id")).distinct()
       exact.agg(count(lit(1)).as("n_exact"))

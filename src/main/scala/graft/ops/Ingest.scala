@@ -68,26 +68,19 @@ object Ingest {
     (names, rows.drop(headerIdx + 1))
   }
 
-  /** P3 — drop rows whose every column is NULL (`app.py:178`,
-    * `dropna(how="all")`). Pure filter — stays in the scan stage.
+  /** P2/P3 — drop all-null rows and all-null columns of re-headered rows
+    * (`app.py:178`, `dropna(how="all")` on both axes). Rows are first fitted
+    * to the header's width (short rows null-padded, cells past the header
+    * cut), so emptiness is judged on exactly the cells the table will hold.
+    * A cell is empty only when it is null. With no row left, no column is
+    * left either.
     */
-  def dropAllNullRows(df: DataFrame): DataFrame =
-    if (df.columns.isEmpty) df
-    else df.filter(df.columns.map(c => col(c).isNotNull).reduce(_ || _))
-
-  /** P2 — drop columns whose every value is NULL (`app.py:178`,
-    * `dropna(axis=1, how="all")`). Requires one aggregate probe (a single
-    * distributed pass computing `count(c)` per column) and then a metadata-
-    * only `drop`; acceptable because it is ingest-time (SURVEY §1.3).
-    */
-  def dropAllNullColumns(df: DataFrame): DataFrame =
-    if (df.columns.isEmpty) df
-    else {
-      val probes = df.columns.map(c => count(col(c)).as(c))
-      val counts = df.agg(probes.head, probes.tail.toIndexedSeq: _*).head()
-      val empty  = df.columns.filter(c => counts.getAs[Long](c) == 0L)
-      if (empty.isEmpty) df else df.drop(empty.toIndexedSeq: _*)
-    }
+  def dropEmpty(names: Seq[String], rows: Seq[Seq[Any]]): (Seq[String], Seq[Seq[Any]]) = {
+    val width  = names.length
+    val fitted = rows.map(_.take(width).toIndexedSeq.padTo(width, null)).filter(_.exists(_ != null))
+    val keep   = (0 until width).filter(i => fitted.exists(_(i) != null))
+    (keep.map(names), fitted.map(r => keep.map(r)))
+  }
 
   /** U1 — union N per-source frames aligning columns **by name** and
     * null-filling missing ones, the semantic match for `pd.concat`

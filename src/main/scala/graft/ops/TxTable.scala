@@ -694,61 +694,31 @@ object TxTable {
       // rename target exist forever and wedge the root
       val v = math.max(commits.lastOption.map(_.version).getOrElse(0L),
         maxClaimedVersion(fs, rp)) + 1
-      if (entries == null)
+      if (entries == null) {
+        // Stage the writes CONCURRENTLY: each stages into its own new dir,
+        // so the jobs are independent until the manifest rename, and a
+        // multi-table commit's staging wall is the largest write, not the
+        // sum. Entry order is preserved, so same-table double writes keep
+        // their last-wins resolution. When any write fails, Concurrent.all
+        // cancels the siblings' jobs and waits for them; every dir staged
+        // so far is then deleted before the rethrow, so nothing leaks
+        // until vacuum.
+        val stagedSoFar = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
         entries =
-          if (writes.size == 1) {
-            val (table, mode, df) = writes.head
-            Seq(stage(root, v, 0, table, df, token).copy(mode = mode))
-          } else {
-            // Stage the writes CONCURRENTLY: each stages into its own new
-            // dir, so the jobs are independent until the manifest rename,
-            // and Spark's scheduler back-fills one write's task tail with
-            // the next write's tasks — a multi-table commit's staging wall
-            // is the largest write, not the sum (guide: overlap independent
-            // jobs). Entry order is preserved, so same-table double writes
-            // keep their last-wins resolution.
-            //
-            // Failure containment: every staging job runs under one commit-
-            // scoped job group; when any write fails (or the bounded await
-            // expires — a hung staging job must not hang the commit
-            // forever), the siblings' in-flight Spark jobs are CANCELLED
-            // (pool.shutdownNow alone does not interrupt a running job) and
-            // every dir staged so far is deleted before the rethrow —
-            // otherwise orphaned staging jobs keep running, contend with
-            // the caller's retry, and their dirs leak until vacuum.
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(writes.size, 4))
-            val group = s"graft-tx-stage-$token"
-            val stagedSoFar = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
-            // generous ceiling (default 24 h), sized for corpus-scale writes
-            // — a bound exists so a wedged filesystem fails loudly, not to
-            // police slow-but-alive jobs
-            val timeoutSec = spark.conf
-              .getOption("spark.graft.tx.stagingTimeoutSec").map(_.toLong)
-              .getOrElse(86400L)
-            try {
-              val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-              val futs = writes.zipWithIndex.map { case ((table, mode, df), i) =>
-                scala.concurrent.Future {
-                  spark.sparkContext.setJobGroup(group,
-                    s"tx staging $table@$root", interruptOnCancel = false)
-                  val e = stage(root, v, i, table, df, token).copy(mode = mode)
-                  stagedSoFar.add(e)
-                  e
-                }(ec)
-              }
-              try futs.map(f => scala.concurrent.Await.result(
-                f, scala.concurrent.duration.Duration(timeoutSec, "s")))
-              catch { case e: Throwable =>
-                spark.sparkContext.cancelJobGroup(group)
-                pool.shutdownNow()
-                stagedSoFar.forEach(se => // best-effort: never mask the cause
-                  try fs.delete(new Path(dataDir(rp), se.dir), true)
-                  catch { case _: Throwable => () })
-                throw e
-              }
-            } finally pool.shutdown()
+          try Concurrent.all(spark)(writes.zipWithIndex.map { case ((table, mode, df), i) =>
+            () => {
+              val e = stage(root, v, i, table, df, token).copy(mode = mode)
+              stagedSoFar.add(e)
+              e
+            }
+          })
+          catch { case e: Throwable =>
+            stagedSoFar.forEach(se => // best-effort: never mask the cause
+              try fs.delete(new Path(dataDir(rp), se.dir), true)
+              catch { case _: Throwable => () })
+            throw e
           }
+      }
       // temp manifest + rename: the ONE atomic step. A reader lists the log
       // before or after this rename; there is no in-between.
       val target = commitPath(rp, v)

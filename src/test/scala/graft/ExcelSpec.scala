@@ -145,15 +145,16 @@ class ExcelSpec extends AnyFunSuite {
 
   test("end-to-end: xlsx upload → pipeline → xlsx export (the reference flow)") {
     val upload: Seq[Seq[Any]] = Seq(
-      Seq("Relatório Cortex", null, null, null),
-      Seq("Endpoint Name", "Endpoint Type", "Operating System", "Agent Version"),
-      Seq("host-x", "SERVER", "Linux", "8.0"),
-      Seq("host-y", "SERVER", null, "7.9"))
+      Seq("Relatório Cortex", null, null, null, null, null),
+      Seq("Endpoint Name", "Endpoint Type", "Operating System", "Agent Version",
+        "Endpoint Status", "Last Upgrade Status"),
+      Seq("host-x", "SERVER", "Linux", "8.0", "connected", "Failed"),
+      Seq("host-y", "SERVER", null, "7.9", "lost contact", "Success"))
     val in = tmp("upload")
     Excel.writeRaw(in, Seq("export" -> upload))
     val df = Pipeline.ingestExcel(spark, in)
-    assert(df.columns.toSeq ==
-      Seq("endpoint_name", "endpoint_type", "operating_system", "agent_version"))
+    assert(df.columns.toSeq == Seq("endpoint_name", "endpoint_type", "operating_system",
+      "agent_version", "endpoint_status", "last_upgrade_status"))
     assert(df.count() == 2)
     val catalog = Pipeline.run(Seq(df), dedupKeys = Seq("endpoint_name"))
     val out = tmp("result")
@@ -161,5 +162,15 @@ class ExcelSpec extends AnyFunSuite {
     val sheet1 = Excel.readRaw(out) // base_limpa: header + 2 rows
     assert(sheet1.head.contains("endpoint_name"))
     assert(sheet1.length == 3)
+    // the tables are collected concurrently; the sheets must still be
+    // written in catalog order, every one of them
+    val zip = new java.util.zip.ZipFile(out)
+    val workbook = try scala.io.Source.fromInputStream(
+        zip.getInputStream(zip.getEntry("xl/workbook.xml")), "UTF-8").mkString
+      finally zip.close()
+    val sheetNames = "<sheet name=\"([^\"]*)\"".r.findAllMatchIn(workbook).map(_.group(1)).toSeq
+    assert(catalog.keys.toSeq ==
+      Seq("base_limpa", "resumo_status", "resumo_os", "falhas_upgrade"))
+    assert(sheetNames == catalog.keys.toSeq)
   }
 }

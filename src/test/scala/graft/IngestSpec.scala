@@ -48,18 +48,22 @@ class IngestSpec extends AnyFunSuite {
     assert(names.distinct == names) // a duplicate would AMBIGUOUS_REFERENCE downstream
   }
 
-  test("dropAllNullRows keeps rows with any value (app.py:178)") {
-    val df = Seq((Some(1), Some("a")), (None, None), (Some(2), None))
-      .toDF("x", "y")
-      .select(col("x"), when(col("y").isNotNull, col("y")).as("y"))
-    assert(Ingest.dropAllNullRows(df).count() == 2)
+  test("dropEmpty keeps rows with any value (app.py:178)") {
+    val rows: Seq[Seq[Any]] =
+      Seq(Seq(1, "a"), Seq(null, null), Seq(2, null), Seq(), Seq(null), Seq("", null))
+    val (names, kept) = Ingest.dropEmpty(Seq("x", "y"), rows)
+    assert(names == Seq("x", "y"))
+    // short rows are null-padded, then judged; only null is empty, not ""
+    assert(kept == Seq(Seq(1, "a"), Seq(2, null), Seq("", null)))
   }
 
-  test("dropAllNullColumns drops only fully-null columns, even one named __n") {
-    val df = Seq((1, null: String, null: String), (2, null, null))
-      .toDF("keep", "__n", "gone")
-    val out = Ingest.dropAllNullColumns(df)
-    assert(out.columns.toSeq == Seq("keep"))
+  test("dropEmpty drops only fully-null columns, even one named __n") {
+    val rows: Seq[Seq[Any]] = Seq(Seq(1, null, null), Seq(2, null, null, "past the header"))
+    val (names, kept) = Ingest.dropEmpty(Seq("keep", "__n", "gone"), rows)
+    assert(names == Seq("keep"))
+    assert(kept == Seq(Seq(1), Seq(2))) // cells past the header are cut, not judged
+    // no non-empty row left: every column is empty
+    assert(Ingest.dropEmpty(Seq("a", "b"), Seq(Seq(null, null))) == ((Nil, Nil)))
   }
 
   test("readJsonQuarantine routes malformed lines whole, parses the rest") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden end-to-end test of the §3.1 pipeline replica over the `endpoints`
@@ -87,7 +88,16 @@ class PipelineSpec extends AnyFunSuite {
   test("exportCatalog writes one parquet dir per table (S6)") {
     val dir = s"/root/repo/target/tmp/pipeline_export_${System.nanoTime()}"
     Pipeline.exportCatalog(catalog, dir)
-    val base = spark.read.parquet(s"$dir/base_limpa")
-    assert(base.count() == 3)
+    assert(catalog.size == 4)
+    assert(new java.io.File(dir).list().toSet == catalog.keySet)
+    // the tables are written concurrently; each must read back equal to
+    // its catalog DataFrame, in schema and in rows
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0001"))
+    def fields(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    catalog.foreach { case (name, df) =>
+      val back = spark.read.parquet(s"$dir/$name")
+      assert(fields(back) == fields(df), name)
+      assert(rows(back) == rows(df), name)
+    }
   }
 }
