@@ -22,9 +22,6 @@ package graft
   * the JSON could say why).
   */
 object Bench {
-  private def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   /** Per-query executor-metric deltas, accumulated task-by-task. */
   final case class QMetrics(
       wall: Double, cpuSec: Double, gcMs: Long, spillBytes: Long,
@@ -82,7 +79,7 @@ object Bench {
     // drop the loop body, leaving an empty nanoTime spin). blocks is a
     // whole-block count so its low bit carries no timing information —
     // xor-ing x's low bit in perturbs the reading by at most ±1 block.
-    s"""{"cpu":${jstr(cpu)},"cores":$cores,"xorshift_mops":${blocks ^ (x & 1L)},"disk_w_mbps":${diskWriteMbps()}}"""
+    s"""{"cpu":${Verify.q(cpu)},"cores":$cores,"xorshift_mops":${blocks ^ (x & 1L)},"disk_w_mbps":${diskWriteMbps()}}"""
   }
 
   /** Buffered-write throughput probe (128 MB, plain FileOutputStream +
@@ -189,8 +186,8 @@ object Bench {
     def ms3(t: Double)  = String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
     val ok   = results.collect { case (n, Right((m, p1, p2))) => (n, m, p1, p2) }
     val errs = results.collect { case (n, Left(e)) => n -> e }
-    val qs    = ok.map { case (k, m, _, _) => s"${jstr(k)}:${ms3(m.wall)}" }.mkString("{", ",", "}")
-    val es    = errs.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs    = ok.map { case (k, m, _, _) => s"${Verify.q(k)}:${ms3(m.wall)}" }.mkString("{", ",", "}")
+    val es    = errs.map { case (k, v) => s"${Verify.q(k)}:${Verify.q(v)}" }.mkString("{", ",", "}")
     // Per-query instrumentation (full artifact only): cpu seconds, GC ms,
     // spill and shuffle bytes of the WINNING pass plus both raw walls.
     // Diagnosis rule a reader can apply mechanically: wall ≫ prior-round
@@ -199,7 +196,7 @@ object Bench {
     val met = ok.map { case (k, m, p1, p2) =>
       val walls = Seq(p1.map(w => s""""pass1":${ms3(w)}"""),
                       p2.map(w => s""""pass2":${ms3(w)}""")).flatten.mkString(",")
-      s"""${jstr(k)}:{"sec":${ms3(m.wall)},"cpu_sec":${ms3(m.cpuSec)},"gc_ms":${m.gcMs},""" +
+      s"""${Verify.q(k)}:{"sec":${ms3(m.wall)},"cpu_sec":${ms3(m.cpuSec)},"gc_ms":${m.gcMs},""" +
         s""""spill_bytes":${m.spillBytes},"shuffle_read_bytes":${m.shufReadBytes},""" +
         s""""shuffle_write_bytes":${m.shufWriteBytes},$walls}"""
     }.mkString("{", ",", "}")
@@ -220,18 +217,20 @@ object Bench {
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (onlyPrefixes.isEmpty) "BENCH_full.json" else "BENCH_filtered.json")
     val qsTop = ok.sortBy(-_._2.wall).take(40)
-      .map { case (k, m, _, _) => s"${jstr(k)}:${ms3(m.wall)}" }.mkString("{", ",", "}")
+      .map { case (k, m, _, _) => s"${Verify.q(k)}:${ms3(m.wall)}" }.mkString("{", ",", "}")
     // The stdout errors payload is BOUNDED (full detail goes to fullPath):
     // with head truncation at the driver, a run with several verbose errors
     // would otherwise push the headline fields out of the kept window.
     val esLine = errs.take(6)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v.take(60))}" }.mkString("{", ",", "}")
-    val filterTag = onlyPrefixes.fold("")(p => s""","filtered":${jstr(p.mkString(","))}""")
+      .map { case (k, v) => s"${Verify.q(k)}:${Verify.q(v.take(60))}" }.mkString("{", ",", "}")
+    val filterTag = onlyPrefixes.fold("")(p => s""","filtered":${Verify.q(p.mkString(","))}""")
+    val note = Verify.q(
+      s"slowest 40 of ${ok.size}; complete map + per-query cpu/gc/spill/shuffle in $fullPath")
     // headline fields lead the line AND repeat at its tail, so the metric
     // survives truncation from either end of the stored window
-    println(s"""{"metric":"total","value":${ms3(total)},"unit":"sec","sf":"$sfDir","n_ok":${ok.size},"n_err":${errs.size}$filterTag,"cpu_sec_total":${ms3(totalCpu)},"gc_ms_total":$totalGc,"errors":$esLine,"host":$host,"queries":$qsTop,"queries_note":"slowest 40 of ${ok.size}; complete map + per-query cpu/gc/spill/shuffle in $fullPath","tail_metric":"total","tail_value":${ms3(total)},"tail_n_ok":${ok.size},"tail_n_err":${errs.size}}""")
+    println(s"""{"metric":"total","value":${ms3(total)},"unit":"sec","sf":${Verify.q(sfDir)},"n_ok":${ok.size},"n_err":${errs.size}$filterTag,"cpu_sec_total":${ms3(totalCpu)},"gc_ms_total":$totalGc,"errors":$esLine,"host":$host,"queries":$qsTop,"queries_note":$note,"tail_metric":"total","tail_value":${ms3(total)},"tail_n_ok":${ok.size},"tail_n_err":${errs.size}}""")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
-      s"""{"queries":$qs,"metrics":$met,"errors":$es,"n_ok":${ok.size},"n_err":${errs.size}$filterTag,"sf":"$sfDir","host":$host,"cpu_sec_total":${ms3(totalCpu)},"gc_ms_total":$totalGc,"total_sec":${ms3(total)}}""" + "\n")
+      s"""{"queries":$qs,"metrics":$met,"errors":$es,"n_ok":${ok.size},"n_err":${errs.size}$filterTag,"sf":${Verify.q(sfDir)},"host":$host,"cpu_sec_total":${ms3(totalCpu)},"gc_ms_total":$totalGc,"total_sec":${ms3(total)}}""" + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] full-artifact write failed: $e") }
     spark.stop()
     if (errs.nonEmpty) sys.exit(1)

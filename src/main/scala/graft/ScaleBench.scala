@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Checkpoints, Dedup, Graph, Similarity, Summaries, Text, TxTable}
+import graft.queries.Shared
 
 /** Dev utility: two-point scaling evidence for the nonlinear-risk operator
   * families (LSH dedup, inverted-index Jaccard, exact quantiles, PageRank,
@@ -323,7 +324,7 @@ object ScaleBench {
     if (imgOn) for (f <- factors)
       graft.ops.Multimodal.writeImageDHashIndex(
         read("documents", f)
-          .select(col("doc_id"), SparkEntry.pngPayloadCol.as("payload")),
+          .select(col("doc_id"), Shared.pngPayloadCol.as("payload")),
         "doc_id", "payload", gw = 8, gh = 8, maxHamming = 2,
         tablePrefix = imgPrefix(f), buckets = 32)
 
@@ -396,7 +397,7 @@ object ScaleBench {
       // (replica offsets give distinct signals), so f× docs = f× clips.
       ("audio_neardup_32", () =>
         graft.ops.Multimodal.audioNearDupPairs(
-          read("documents", f).select(col("doc_id"), SparkEntry.wavPayloadCol.as("payload")),
+          read("documents", f).select(col("doc_id"), Shared.wavPayloadCol.as("payload")),
           "doc_id", "payload", lanes = 32, maxHamming = 2).count()),
       // the corpus-scale mitigation: lanes 61 → 60 bits → 20-bit band
       // keys, ~2^20 buckets per band — occupancy (and with it the
@@ -404,14 +405,14 @@ object ScaleBench {
       // dedup runs, exactly as annPlanesFor widens sign-LSH keys with n
       ("audio_neardup_61", () =>
         graft.ops.Multimodal.audioNearDupPairs(
-          read("documents", f).select(col("doc_id"), SparkEntry.wavPayloadCol.as("payload")),
+          read("documents", f).select(col("doc_id"), Shared.wavPayloadCol.as("payload")),
           "doc_id", "payload", lanes = 61, maxHamming = 2).count()),
       // the RULE the two fixed points bracket: lanes = dHashLanesFor(n) —
       // geometry follows the corpus, so the family's exponent should track
       // the 61-lane member as replicas grow instead of the 32-lane knee
       ("audio_neardup_derived", () => {
         val src = read("documents", f)
-          .select(col("doc_id"), SparkEntry.wavPayloadCol.as("payload"))
+          .select(col("doc_id"), Shared.wavPayloadCol.as("payload"))
         val lanes = graft.ops.Multimodal.dHashLanesFor(src.count())
         graft.ops.Multimodal.audioNearDupPairs(
           src, "doc_id", "payload", lanes = lanes, maxHamming = 2).count()
@@ -423,7 +424,7 @@ object ScaleBench {
       // so the family should read flat like the 61-lane member
       ("audio_neardup_wide", () =>
         graft.ops.Multimodal.audioNearDupPairsWide(
-          read("documents", f).select(col("doc_id"), SparkEntry.wavPayloadCol.as("payload")),
+          read("documents", f).select(col("doc_id"), Shared.wavPayloadCol.as("payload")),
           "doc_id", "payload", lanes = 101, maxHamming = 3).count()),
       // the raster twin of audio_neardup_32: real PNG pixel decode → grid
       // dHash → the shared Hamming-banded pair join; 56 hash bits give
@@ -432,7 +433,7 @@ object ScaleBench {
       // + decode are the per-row linear term)
       ("image_neardup", () =>
         graft.ops.Multimodal.imageNearDupPairs(
-          read("documents", f).select(col("doc_id"), SparkEntry.pngPayloadCol.as("payload")),
+          read("documents", f).select(col("doc_id"), Shared.pngPayloadCol.as("payload")),
           "doc_id", "payload", gw = 8, gh = 8, maxHamming = 2).count()),
       // fixed 1×-sized probe batch against the f× persisted image index
       // (disjoint id range → unrelated rasters — steady-state probe cost
@@ -441,7 +442,7 @@ object ScaleBench {
       ("image_index_steady", () => {
         val batch = read("documents", 1)
           .select((col("doc_id") + lit(50000000000L)).as("doc_id"))
-          .select(col("doc_id"), SparkEntry.pngPayloadCol.as("payload"))
+          .select(col("doc_id"), Shared.pngPayloadCol.as("payload"))
         graft.ops.Multimodal.imageDedupAgainstStoredIndex(
           batch, "doc_id", "payload", imgPrefix(f)).count()
       }),

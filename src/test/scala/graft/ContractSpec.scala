@@ -26,6 +26,20 @@ class ContractSpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty, s"rows-only keys: $rowsOnly")
   }
 
+  test("query records have distinct names") {
+    // the name-keyed maps keep only the last of two equal names, so a
+    // copy-pasted record would silently drop a query
+    val names = SparkEntry.records.map(_.name)
+    assert(names.distinct.size == names.size, s"duplicate names: ${names.diff(names.distinct)}")
+  }
+
+  test("Verify.q escapes quotes, backslashes and control chars as JSON") {
+    val raw = "a\"b\\c\nd\re\tf\u0001g"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.q(raw), classOf[String])
+    assert(back == raw)
+  }
+
   test("entry (driver smoke) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Multimodal
+import graft.queries.Shared
 
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -601,7 +602,7 @@ class MultimodalSpec extends AnyFunSuite {
     }
     val validWav = wavBytes(8000, (0 until 64).map(i => (i * 997) % 40000 - 20000))
     val validMp4 = Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .filter($"doc_id" === 3).select(graft.SparkEntry.mp4PayloadCol)
+      .filter($"doc_id" === 3).select(Shared.mp4PayloadCol)
       .collect()(0).getAs[Array[Byte]](0)
     val seeds = Seq(validPng, validGif, validJpg, validWav, validMp4)
     def decodeAll(b: Array[Byte]): Unit = {
@@ -950,7 +951,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("q216's in-plan JPEG synthesis emits byte-valid files: exact DC walk, JDK-decodable") {
     val df = Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .filter($"doc_id" < 8)
-      .select($"doc_id", graft.SparkEntry.jpegPayloadCol.as("payload"))
+      .select($"doc_id", Shared.jpegPayloadCol.as("payload"))
     val rows = df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     assert(rows.size == 8)
     def sBit(doc: Long, b: Long): Long = {
@@ -1122,7 +1123,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("q212's in-plan mp4 synthesis parses back to its own field formulas") {
     val out = Seq(0L, 7L, 99L).toDF("doc_id")
-      .select($"doc_id", Multimodal.mp4Info(SparkEntry.mp4PayloadCol).as("m"))
+      .select($"doc_id", Multimodal.mp4Info(Shared.mp4PayloadCol).as("m"))
       .select($"doc_id", $"m.timescale", $"m.duration", $"m.width", $"m.height")
       .as[(Long, Int, Long, Int, Int)].collect()
     for ((doc, ts, dur, w, h) <- out) {
@@ -1136,7 +1137,7 @@ class MultimodalSpec extends AnyFunSuite {
     // chunk CRC must check out and the zlib stream must inflate to the
     // formula's scanlines (adler verified by the wrapped Inflater)
     val payloads = Seq(0L, 5L, 7L).toDF("doc_id")
-      .select($"doc_id", SparkEntry.pngPayloadCol.as("p"))
+      .select($"doc_id", Shared.pngPayloadCol.as("p"))
       .as[(Long, Array[Byte])].collect().toMap
     def be32(b: Array[Byte], i: Int) = ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
       ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions.{col, lit, spark_partition_id, when}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.Shared
+
 /** Plan-shape assertions (SURVEY §4.2): the operators must not merely be
   * correct — the physical plans must be the ones that survive a 100× scale-up
   * (pushdown into the scan, broadcast for dims, no body-shuffle in dedup).
@@ -501,7 +503,7 @@ class PlanSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold"          -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val docs = Tables.t(spark, sf, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"), graft.SparkEntry.wavPayloadCol.as("payload"))
+        .select(col("doc_id"), Shared.wavPayloadCol.as("payload"))
       graft.ops.Multimodal.writeDHashIndex(docs.filter(col("doc_id") % 4 <= 1),
         "doc_id", "payload", 32, 2, "planspec_dhidx", buckets = 2)
       val df = graft.ops.Multimodal.audioDedupAgainstIndex(
@@ -522,7 +524,7 @@ class PlanSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold"          -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val docs = Tables.t(spark, sf, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"), graft.SparkEntry.pngPayloadCol.as("payload"))
+        .select(col("doc_id"), Shared.pngPayloadCol.as("payload"))
       graft.ops.Multimodal.writeImageDHashIndex(docs.filter(col("doc_id") % 4 <= 1),
         "doc_id", "payload", 8, 8, 2, "planspec_idhidx", buckets = 2)
       val df = graft.ops.Multimodal.imageDedupAgainstIndex(
