@@ -207,7 +207,7 @@ object Bench {
     // timings it is meant to contextualize)
     val host = hostFingerprint()
     // The driver stores only the final ~2 KB of output, so a line carrying
-    // all ~196 query timings (~5 KB) always arrived head-truncated and
+    // all 222 query timings (~6 KB) always arrived head-truncated and
     // unparseable (BENCH_r07–r10 record `parsed: null`). The stdout line is
     // therefore kept UNDER the window by construction: headline totals, any
     // errors, and the slowest-40 queries (the ones a plan audit reads

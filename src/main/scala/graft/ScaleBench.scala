@@ -78,7 +78,7 @@ object ScaleBench {
     */
   private def corpusDir(sfDir: String, table: String, f: Int) = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"/root/repo/target/scale/$tag/$table$f"
+    Tables.targetPath(s"scale/$tag/$table$f")
   }
 
   private def writeOnce(df: => DataFrame, path: String): Unit =
@@ -264,7 +264,7 @@ object ScaleBench {
     // replica stride vanishes mod 100). The feed is the KNOWN batch, not a
     // TxTable.diff — diff is O(snapshot scan) by construction and belongs
     // to the recovery path, not the steady-state loop.
-    def medRoot(f: Int) = s"/root/repo/target/scale_tx/${steadyTag}_f$f"
+    def medRoot(f: Int) = Tables.targetPath(s"scale_tx/${steadyTag}_f$f")
     def medSilver(df: DataFrame) = df
       .withColumn("gross", col("l_extendedprice") * col("l_quantity"))
       .withColumn("g", pmod(col("l_suppkey"), lit(100L)))
@@ -297,7 +297,7 @@ object ScaleBench {
     // loop's cost — the index does; an empty root keeps the append
     // replay-clean across invocations with no seeding arithmetic).
     def fuzzyPrefix(f: Int) = s"fuzzy_${steadyTag}_f$f"
-    def fuzzyRoot(f: Int)   = s"/root/repo/target/scale_tx/fuzzy_${steadyTag}_f$f"
+    def fuzzyRoot(f: Int)   = Tables.targetPath(s"scale_tx/fuzzy_${steadyTag}_f$f")
     val fuzzyOn = only.isEmpty || only.contains("fuzzy_ingest_steady")
     if (fuzzyOn) for (f <- factors) {
       Text.writeMinhashIndex(read("documents", f), "doc_id", "text", 3, 16,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev utility: materialize a CONSISTENT ×N replication of the whole
-  * testdata directory, so the full 190-query suite can be benched at
+  * testdata directory, so the full 222-query suite can be benched at
   * ~sf1 from an sf0.1 source (`BENCH_sfx10.json` / SCALING.md). The
   * ScaleBench family probes scale one operator's input at a time; this
   * scales every table AT ONCE with foreign keys kept valid, which is what
@@ -54,7 +54,7 @@ object ScaleCorpus {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = args.drop(1).headOption.getOrElse {
       val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      s"/root/repo/target/scale_suite/${tag}_x$n"
+      Tables.targetPath(s"scale_suite/${tag}_x$n")
     }
     val spark = Sessions.local()
 

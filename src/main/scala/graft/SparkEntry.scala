@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{BaseQueries, ClosureQueries, Query, SimilarityQueries, TextQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every entry in `queries` is one operator row from SURVEY §2, expressed
   * Spark-first, with a DuckDB oracle in `oracleSql`. Determinism conventions

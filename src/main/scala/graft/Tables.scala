@@ -26,7 +26,8 @@ object Tables {
     * constant to every scan of every query (+43% suite wall, cpu 540→1386 s)
     * while only per-row-CPU-heavy scans profited. The targeted fix stays
     * [[spread]] at the call sites whose SCAN-STAGE work is the bottleneck;
-    * a real corpus (many files, many row groups) splits by itself.
+    * it is gated on the input's width, so a real corpus (many files, many
+    * row groups) that splits by itself passes through unshuffled.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
@@ -34,6 +35,13 @@ object Tables {
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df
   }
+
+  /** `rel` resolved under the working directory's `target/` — the home of
+    * the engine's on-disk fixtures (CDC/medallion/zorder roots, ScaleCorpus
+    * and ScaleBench corpora), the way `spark-warehouse/` resolves under it:
+    * each checkout keeps its own fixtures.
+    */
+  def targetPath(rel: String): String = new java.io.File("target", rel).getAbsolutePath
 
   // WeakHashMap: a stopped SparkSession must be collectable — a strong-keyed
   // memo would retain every session (and its sessionState) for the JVM's
@@ -57,15 +65,38 @@ object Tables {
     }
   }
 
-  /** Round-robin the rows across the cluster before a CPU-heavy narrow pass.
+  /** The engine's one spread policy: round-robin `df` across the cluster
+    * before a CPU-dense pass (signature, histogram, kernel stages) ONLY when
+    * it would otherwise execute narrower than the cluster. A one-row-group
+    * parquet input (every driver fixture) arrives as ONE split and would
+    * serialize that pass — measured as 1.5 s single-task jobs at sf0.1.
     *
-    * The driver test files are single-row-group parquet, which Spark cannot
-    * split — without this, per-document hashing/scoring runs in ONE task no
-    * matter how many cores exist. On a real corpus (many files, many row
-    * groups) the scan parallelizes by itself and this exchange is unnecessary;
-    * it costs one shuffle of the projected columns, which the expression work
-    * it unlocks dwarfs.
+    * The spread is GATED on the input's actual execution width: when the
+    * plan is a plain scan→filter→project chain (incl. a pinned LogicalRDD),
+    * its partition count is knowable without running anything, and an input
+    * that already arrives `width`-wide is returned UNCHANGED — at corpus
+    * scale the source has plenty of splits and the unconditional form was a
+    * pure full-corpus text shuffle (write+read of every document body) with
+    * no parallelism gain. Inputs whose plan contains joins/aggregates keep
+    * the spread: their runtime width is not knowable plan-side, and the
+    * motivating case (a broadcast-joined derivation of a 1-split pinned
+    * corpus, e.g. q165's digest-dedup slice) executes exactly as narrow as
+    * its narrowest input. Width = max(defaultParallelism,
+    * spark.sql.shuffle.partitions): locally identical (session pins both to
+    * the core count); on a cluster the shuffle width is the data-sized knob.
     */
-  def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  def spread(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LeafNode, Project => LProject}
+    val sc    = df.sparkSession.sparkContext
+    val width = math.max(sc.defaultParallelism,
+      df.sparkSession.sessionState.conf.numShufflePartitions)
+    val scanShaped = df.queryExecution.optimizedPlan.collectFirst {
+      case n if !n.isInstanceOf[LProject] && !n.isInstanceOf[LFilter] &&
+        !n.isInstanceOf[LeafNode] => n
+    }.isEmpty
+    // toRdd on a scan-shaped plan builds the RDD without running a job (no
+    // exchange below, so AQE has no stage to materialize)
+    if (scanShaped && df.queryExecution.toRdd.getNumPartitions >= width) df
+    else df.repartition(width)
+  }
 }

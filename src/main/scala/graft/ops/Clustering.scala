@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Clustering and second-moment statistics over embedding columns — the
   * model-fitting half of a training-data pipeline (corpus topic balancing,
   * semantic bucketing, dimensionality reduction before ANN).
@@ -105,7 +107,7 @@ object Clustering {
     // is CPU-bound and a small parquet input arrives as ONE split, which
     // would serialize every iteration (measured: q117's per-iteration
     // assign+mean jobs ran single-task) — the minhashNearDupPairs device,
-    // gated on the input's actual width (Text.spreadIfNarrow). PINNED
+    // gated on the input's actual width (graft.Tables.spread). PINNED
     // (lazily) because every iteration's centroid collect is its own
     // action: unpinned, each of the `iters` actions re-paid the scan plus
     // the spread exchange, and the re-executed round-robin could land rows
@@ -114,7 +116,7 @@ object Clustering {
     // This is the iterative-fit training-set cache, not cross-run caching
     // (the caller's terminal action still computes from the parquet input;
     // Bench/Verify release pinned blocks after each query).
-    val clean = Checkpoints.pin(Text.spreadIfNarrow(
+    val clean = Checkpoints.pin(Tables.spread(
         df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)), eager = false)
     var centroids: Seq[(Int, Seq[Double])] = seeds.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
     var assigned  = clean

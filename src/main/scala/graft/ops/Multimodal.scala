@@ -276,7 +276,14 @@ object Multimodal {
     * WIDENS from the default as the corpus grows — it never loosens a
     * small corpus below it.
     */
-  def dHashLanesFor(n: Long, maxHamming: Int = 2, targetBucket: Long = 250L): Int = {
+  def dHashLanesFor(n: Long, maxHamming: Int = 2, targetBucket: Long = 250L): Int =
+    dHashLanesCapped(n, maxHamming, targetBucket, cap = 61)
+
+  /** The occupancy rule shared by [[dHashLanesFor]] and
+    * [[dHashLanesForWide]]; only the lane cap differs.
+    */
+  private def dHashLanesCapped(n: Long, maxHamming: Int, targetBucket: Long,
+      cap: Int): Int = {
     require(n >= 0 && maxHamming >= 0 && targetBucket >= 1,
       "need n >= 0, maxHamming >= 0, positive targetBucket")
     val bands = maxHamming + 1
@@ -286,7 +293,7 @@ object Multimodal {
     // exact smallest w with 2^w >= x — the replayable form (ceil of a
     // float log2 can land on either side of an exact power of two)
     val width = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(x - 1))
-    math.min(61, math.max(32, 1 + bands * width))
+    math.min(cap, math.max(32, 1 + bands * width))
   }
 
   def audioDHash(features: Column, lanes: Int): Column = {
@@ -562,14 +569,8 @@ object Multimodal {
     * construction if it ever isn't.
     */
   def dHashLanesForWide(n: Long, maxHamming: Int = 2,
-      targetBucket: Long = 250L): Int = {
-    require(n >= 0 && maxHamming >= 0 && targetBucket >= 1,
-      "need n >= 0, maxHamming >= 0, positive targetBucket")
-    val bands = maxHamming + 1
-    val x = math.max(1L, n / targetBucket + (if (n % targetBucket == 0) 0L else 1L))
-    val width = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(x - 1))
-    math.min(121, math.max(32, 1 + bands * width))
-  }
+      targetBucket: Long = 250L): Int =
+    dHashLanesCapped(n, maxHamming, targetBucket, cap = 121)
 
   /** [[audioNearDupPairs]] past the 61-lane single-long boundary: the
     * WIDE (two-word) hash head feeding the same Hamming-banded pipeline —

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Text analysis & fuzzy-dedup surface (SURVEY §2.10: T1–T3, T6, D3) plus the
   * LLM-pipeline extensions (language-ID, quality scoring, token counting,
   * document fingerprinting, SimHash).
@@ -17,40 +19,6 @@ import org.apache.spark.sql.functions._
   * fact table; swap in `xxhash64` when oracle parity is not required.
   */
 object Text {
-
-  /** Round-robin-spread `df` across the cluster ONLY when it would otherwise
-    * execute too narrow for a CPU-dense pass (the signature/histogram/kernel
-    * stages: a small parquet input arrives as ONE split, which would
-    * serialize them — measured as 1.5 s single-task jobs at sf0.1).
-    *
-    * The spread is GATED on the input's actual execution width: when the
-    * plan is a plain scan→filter→project chain (incl. a pinned LogicalRDD),
-    * its partition count is knowable without running anything, and an input
-    * that already arrives `width`-wide is returned UNCHANGED — at corpus
-    * scale the source has plenty of splits and the unconditional form was a
-    * pure full-corpus text shuffle (write+read of every document body) with
-    * no parallelism gain. Inputs whose plan contains joins/aggregates keep
-    * the spread: their runtime width is not knowable plan-side, and the
-    * motivating case (a broadcast-joined derivation of a 1-split pinned
-    * corpus, e.g. q165's digest-dedup slice) executes exactly as narrow as
-    * its narrowest input. Width = max(defaultParallelism,
-    * spark.sql.shuffle.partitions): locally identical (session pins both to
-    * the core count); on a cluster the shuffle width is the data-sized knob.
-    */
-  private[graft] def spreadIfNarrow(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LeafNode, Project => LProject}
-    val sc    = df.sparkSession.sparkContext
-    val width = math.max(sc.defaultParallelism,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val scanShaped = df.queryExecution.optimizedPlan.collectFirst {
-      case n if !n.isInstanceOf[LProject] && !n.isInstanceOf[LFilter] &&
-        !n.isInstanceOf[LeafNode] => n
-    }.isEmpty
-    // toRdd on a scan-shaped plan builds the RDD without running a job (no
-    // exchange below, so AQE has no stage to materialize)
-    if (scanShaped && df.queryExecution.toRdd.getNumPartitions >= width) df
-    else df.repartition(width)
-  }
 
   /** T1 — whitespace tokenization, case-folded. Contract quirk shared with
     * the DuckDB oracle (`string_split_regex`): EMPTY/whitespace-only text
@@ -598,8 +566,7 @@ object Text {
     require(maxBucket >= 1, "maxBucket must be positive")
     val bandWidth = nBits / bands
     val mask      = (1L << bandWidth) - 1
-    val spread = docs.select(col(idCol).as("id"), col(textCol))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    val spread = Tables.spread(docs.select(col(idCol).as("id"), col(textCol)))
     val sig = spread.select(col("id"),
       simhashOfSet(shinglesOf(col(textCol), nShingle), nBits).as("sig"))
     val ex = Checkpoints.pin(sig
@@ -723,7 +690,7 @@ object Text {
       textCol: String,
       nShingle: Int,
       k: Int): DataFrame = {
-    val spread = spreadIfNarrow(docs.select(col(idCol).as("id"), col(textCol)))
+    val spread = Tables.spread(docs.select(col(idCol).as("id"), col(textCol)))
     val sig = spread
       .select(col("id"), shinglesOf(col(textCol), nShingle).as("ss"))
       .select(col("id"), posexplode(minhashSignatureOf(col("ss"), k)).as(Seq("band", "hv")))
@@ -747,10 +714,10 @@ object Text {
     // The signature pass is CPU-bound; a small parquet input arrives as ONE
     // split, which would serialize it. Spread the raw (id, text) rows across
     // the cluster before the heavy expression — gated on the input's actual
-    // width ([[spreadIfNarrow]]): at real scale the source has enough splits
-    // and the spread (a full text shuffle there) never fires.
+    // width ([[graft.Tables.spread]]): at real scale the source has enough
+    // splits and the spread (a full text shuffle there) never fires.
     val scope  = scopeCols.map(col)
-    val spread = spreadIfNarrow(
+    val spread = Tables.spread(
       docs.select(col(idCol).as("id") +: col(textCol) +: scope: _*))
     val sh = spread.select(col("id") +: shinglesOf(col(textCol), nShingle).as("ss") +: scope: _*)
     // Shuffle the signature rows by the LSH join key. Both sides of the
@@ -847,9 +814,8 @@ object Text {
     */
   def singleEditNearPairs(df: DataFrame, idCol: String, strCol: String): DataFrame = {
     // pinned: two consumers, the masked index + the exact-dup pass
-    val base = Checkpoints.pin(df.select(col(idCol).as("id"), col(strCol).as("s"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism), // see minhashNearDupPairs
-      eager = false)
+    val base = Checkpoints.pin(
+      Tables.spread(df.select(col(idCol).as("id"), col(strCol).as("s"))), eager = false)
     // The index rows CARRY the source string: the key column is short by
     // contract, so shipping it with each variant costs less than the two
     // extra joins a verify-time name re-fetch would need. Variants come
@@ -920,9 +886,7 @@ object Text {
       nShingle: Int,
       k: Int,
       threshold: Double): DataFrame = {
-    def shingled(df: DataFrame) = df
-      .select(col(idCol).as("id"), col(textCol))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism) // see minhashNearDupPairs
+    def shingled(df: DataFrame) = Tables.spread(df.select(col(idCol).as("id"), col(textCol)))
       .select(col("id"), shinglesOf(col(textCol), nShingle).as("ss"))
     def sigOf(sh: DataFrame) = sh
       .select(col("id"), posexplode(minhashSignatureOf(col("ss"), k)).as(Seq("band", "hv")))
@@ -978,9 +942,7 @@ object Text {
     // the previous index generation would silently subtract the NEW
     // corpus's rows from every search
     if (mode == "overwrite") Storage.clearTombstones(spark, s"${tablePrefix}_del")
-    val sh = corpus
-      .select(col(idCol).as("id"), col(textCol))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val sh = Tables.spread(corpus.select(col(idCol).as("id"), col(textCol)))
       .select(col("id"), shinglesOf(col(textCol), nShingle).as("ss"))
     def sigOf(src: DataFrame) = src.select(col("id"),
       posexplode(minhashSignatureOf(col("ss"), k)).as(Seq("band", "hv")))
@@ -1017,9 +979,7 @@ object Text {
       threshold: Double,
       tablePrefix: String): DataFrame = {
     val spark = batch.sparkSession
-    val bsh = batch
-      .select(col(idCol).as("id"), col(textCol))
-      .repartition(spark.sparkContext.defaultParallelism) // see minhashNearDupPairs
+    val bsh = Tables.spread(batch.select(col(idCol).as("id"), col(textCol)))
       .select(col("id"), shinglesOf(col(textCol), nShingle).as("ss"))
     val bsig = bsh.select(col("id"),
       posexplode(minhashSignatureOf(col("ss"), k)).as(Seq("band", "hv")))
@@ -1108,8 +1068,7 @@ object Text {
       textCol: String,
       nShingle: Int,
       maxDf: Int): DataFrame = {
-    val spread = spreadIfNarrow(
-      docs.select(col(idCol).as("id"), col(textCol))) // see minhashNearDupPairs
+    val spread = Tables.spread(docs.select(col(idCol).as("id"), col(textCol)))
     val sh  = spread.select(col("id"), shinglesOf(col(textCol), nShingle).as("ss"))
     // The postings index feeds FIVE consumers (hot set, both self-join
     // sides, both hot-overlap probes). Exchange reuse does not reliably
@@ -1496,9 +1455,9 @@ object Text {
     // input arrives as ONE split, which would serialize it (measured:
     // q126's pin materialized as two 1.5 s single-task jobs) — same
     // spread-before-the-heavy-expression device as minhashNearDupPairs,
-    // gated on the input's actual width ([[spreadIfNarrow]]) so a
+    // gated on the input's actual width ([[graft.Tables.spread]]) so a
     // many-split corpus never pays a text shuffle here
-    spreadIfNarrow(docs
+    Tables.spread(docs
       .filter(col(textCol).isNotNull && length(col(textCol)) >= 2)
       .select(col(idCol), col(textCol)))
       .select(col(idCol),

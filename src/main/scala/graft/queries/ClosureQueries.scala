@@ -513,7 +513,7 @@ object ClosureQueries {
     // S5 — CSV sink + source round-trip (schema-explicit read back)
     Query("q51_csv_roundtrip", (s, d) => {
       val src  = t(s, d, "part")
-      val path = s"/root/repo/target/tmp/csv_part_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val path = Tables.targetPath(s"tmp/csv_part_${d.replaceAll("[^0-9a-zA-Z]", "_")}")
       src.write.mode("overwrite").option("header", "true").csv(path)
       s.read.option("header", "true").schema(src.schema).csv(path)
         .groupBy(col("p_brand"))
@@ -528,7 +528,7 @@ object ClosureQueries {
     // Spark writes shortest-round-trip doubles, so values survive exactly)
     Query("q72_json_roundtrip", (s, d) => {
       val src = t(s, d, "orders").select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-      val path = s"/root/repo/target/tmp/json_orders_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val path = Tables.targetPath(s"tmp/json_orders_${d.replaceAll("[^0-9a-zA-Z]", "_")}")
       src.write.mode("overwrite").json(path)
       s.read.schema(src.schema).json(path)
         .groupBy(col("o_orderstatus"))
@@ -542,7 +542,7 @@ object ClosureQueries {
     // S — ORC sink + source round-trip (columnar alternative to parquet)
     Query("q73_orc_roundtrip", (s, d) => {
       val src  = t(s, d, "supplier")
-      val path = s"/root/repo/target/tmp/orc_supplier_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val path = Tables.targetPath(s"tmp/orc_supplier_${d.replaceAll("[^0-9a-zA-Z]", "_")}")
       src.write.mode("overwrite").orc(path)
       s.read.orc(path)
         .groupBy(col("s_nationkey"))
@@ -992,7 +992,7 @@ object ClosureQueries {
     // side must count exactly the injected lines.
     Query("q83_json_quarantine", (s, d) => {
       val src  = t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val path = s"/root/repo/target/tmp/jsonq_orders_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val path = Tables.targetPath(s"tmp/jsonq_orders_${d.replaceAll("[^0-9a-zA-Z]", "_")}")
       src.write.mode("overwrite").json(path)
       java.nio.file.Files.write(java.nio.file.Paths.get(path, "corrupt.txt"),
         java.util.Arrays.asList(
@@ -2701,7 +2701,7 @@ object ClosureQueries {
     // aggregates the RE-READ gold table, so the round trip through the
     // commit log is what the oracle checks
     Query("q167_medallion", (s, d) => {
-      val root = s"/root/repo/target/tmp/medallion_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val root = Tables.targetPath(s"tmp/medallion_${d.replaceAll("[^0-9a-zA-Z]", "_")}")
       val bronze = t(s, d, "orders")
       val silver = bronze
         .withColumn("o_orderstatus", upper(trim(col("o_orderstatus"))))
@@ -3485,7 +3485,7 @@ object ClosureQueries {
       // domains, so the bench prices the skipping machinery, not a rewrite
       // of the widest possible table (StorageSpec covers the continuous-
       // domain price case)
-      val dir = s"/root/repo/target/tmp/zorder_li_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val dir = Tables.targetPath(s"tmp/zorder_li_${d.replaceAll("[^0-9a-zA-Z]", "_")}")
       val statsDir = dir + "_stats"
       // file count derives from the table (≈500k rows/file, floor 16):
       // with a FIXED file count, rows-per-file — and so the pruning

@@ -327,7 +327,7 @@ object Shared {
 
   private[queries] def cdcRoot(s: SparkSession, d: String, tag: String,
       build: String => Seq[Long]): (String, Seq[Long]) = {
-    val root = s"/root/repo/target/tmp/$tag" + d.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = Tables.targetPath(s"tmp/$tag" + d.replaceAll("[^0-9a-zA-Z]", "_"))
     val rp = new org.apache.hadoop.fs.Path(root)
     val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(rp)) fs.delete(rp, true)
