@@ -1,226 +1,84 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Checkpoints, Dedup, Graph, Similarity, Summaries, Text, TxTable}
+import graft.ops.{Checkpoints, Dedup, Similarity, Summaries, Text, TxTable}
 import graft.queries.Shared
 
-/** Dev utility: two-point scaling evidence for the nonlinear-risk operator
-  * families (LSH dedup, inverted-index Jaccard, exact quantiles, PageRank,
-  * sign-LSH ANN). sf0.1 correctness runs say nothing about how these bend
-  * as data grows; this measures each family at 1× and REPLICA× (default
-  * 10×) of the same sf dir and prints one JSON line per (family, factor),
-  * so a super-linear blow-up shows itself locally before a real cluster
-  * finds it. Results land in SCALING.md.
+/** Dev utility: two-point scaling evidence for the operator families no
+  * query scales. Bench over a [[ScaleCorpus]] corpus already times every
+  * query's operator at full corpus scale, so this keeps only what the suite
+  * cannot show: the steady-state index/ingest loops, incremental view
+  * maintenance, the medallion increment, BPE's merge-count axis, and the
+  * multimodal/PQ operators whose queries run on a fixed key slice. It
+  * measures each family at 1× and REPLICA× (default 10×) and prints one JSON
+  * line per (family, factor), so a super-linear blow-up shows itself locally
+  * before a real cluster finds it. Results land in SCALING.md, which also
+  * names the query that carries each operator a query does scale.
   *
-  * Replication is NOT naive cloning: a 10× clone corpus would turn every
-  * document into a 10-way near-dup family and every embedding into a
-  * 10-way cosine clone — measuring the pathological-duplication path
-  * (q173's subject) instead of ordinary growth. Each replica instead gets
-  *  - text: a distinct rotation of a 10-consonant+vowel `translate`
-  *    alphabet, which rewrites nearly every shingle, so replicas are NOT
-  *    near-dups of their source and the pair/bucket statistics stay
-  *    corpus-like;
-  *  - embeddings: deterministic per-(id, lane) jitter of ±0.15 amplitude,
-  *    enough to break cosine cliques while keeping the value distribution;
-  *  - graph: disjoint id-offset copies (component count scales, degree
-  *    distribution is preserved);
-  *  - lineitem: id-offset copies (value distribution identical, so the
-  *    quantile domain stays fixed while row count scales).
+  * Both factors are [[ScaleCorpus]] corpora (`ScaleCorpus.build`, written
+  * once per (source, factor) and shared with Bench's ×N runs), read through
+  * [[Tables.t]], so both factors scan the same multi-file layout. Derived
+  * fixtures (IVM views, persisted indices, TxTable roots) are keyed by the
+  * corpus dir, never by the source dir alone, so a fixture can never
+  * outlive the corpus it was built from.
   *
-  * Usage: `runMain graft.ScaleBench [replicas]` with `SPARK_GRAFT_SF_DIR`
-  * (default sf0.1). The replicated corpora are written once under
-  * `target/scale/<table><f>` and reused, so both factors are read from
-  * parquet through identical scan paths.
+  * Usage: `runMain graft.ScaleBench [replicas] [family...]` with
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1).
   */
 object ScaleBench {
 
-  private val alphabet = "aeiounstrl"
-  // disjoint consonant alphabet, used ONLY by the steady-state batches so
-  // they can never collide with a rot1-keyed corpus replica
-  private val alphabet2 = "bcdfghjkmp"
-
-  /** Replica i of the documents table: ids offset to a disjoint range, text
-    * rewritten by a per-replica character rotation (identity for i == 0).
-    * The single rotation is injective only for i < alphabet.length — replica
-    * i and i+10 would be byte-identical clones, silently rebuilding the
-    * dup-flood pathology ScaleCorpus's composed two-alphabet rotation was
-    * built to avoid. ScaleBench keeps rot1-only (the steady-state batches'
-    * disjointness depends on corpus replicas never touching alphabet2), so
-    * main() bounds the CLI replica count instead; past 10×, use ScaleCorpus.
-    */
-  private def docReplica(docs: DataFrame, i: Int): DataFrame = {
-    require(i < alphabet.length,
-      s"docReplica rotation is non-injective at replica $i (alphabet has " +
-        s"${alphabet.length} chars); use graft.ScaleCorpus for factors > ${alphabet.length}")
-    val rot = alphabet.drop(i % alphabet.length) + alphabet.take(i % alphabet.length)
-    docs.select(
-      (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-      (if (i == 0) col("text") else translate(col("text"), alphabet, rot)).as("text"))
-  }
-
-  private def embReplica(emb: DataFrame, i: Int): DataFrame = {
-    val jitter = transform(col("embedding"), (x, j) =>
-      x + ((pmod(hash(col("vec_id"), lit(i), j), lit(1000)) / lit(1000.0)) - 0.5) * 0.3)
-    emb.select(
-      (col("vec_id") + lit(i * 10000000L)).as("vec_id"),
-      (if (i == 0) col("embedding")
-       else jitter.cast("array<float>")).as("embedding"))
-  }
-
-  private def replicate(df: DataFrame, n: Int, mk: (DataFrame, Int) => DataFrame): DataFrame =
-    (0 until n).map(mk(df, _)).reduce(_ unionByName _)
-
-  /** Cache key includes the SOURCE sf dir: without it, switching
-    * SPARK_GRAFT_SF_DIR would silently reuse the previous run's replicas
-    * (writeOnce sees _SUCCESS) and publish wrong scaling numbers.
-    */
-  private def corpusDir(sfDir: String, table: String, f: Int) = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Tables.targetPath(s"scale/$tag/$table$f")
-  }
-
-  private def writeOnce(df: => DataFrame, path: String): Unit =
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      df.write.mode("overwrite").parquet(path)
-
-  /** family → corpus tables it reads; corpora are built on demand from
-    * this map, so a filtered run only materializes (and only validates)
-    * what it measures — which is also what lets a documents-free family
-    * (exact_quantiles, ivm_*, graph) run past the text rotation's
-    * ×10 injectivity bound.
-    */
-  private val familyTables: Map[String, Set[String]] = Map(
-    "lsh_minhash"         -> Set("documents"),
-    "lsh_simhash"         -> Set("documents"),
-    "jaccard_inverted"    -> Set("documents"),
-    "containment"         -> Set("documents"),
-    "index_search_steady" -> Set("documents"),
-    "index_append_steady" -> Set("documents"),
-    "fuzzy_ingest_steady" -> Set("documents"),
-    "exact_quantiles"     -> Set("lineitem"),
-    "pagerank"            -> Set("edges"),
-    "label_propagation"   -> Set("edges"),
-    "ann_sign_lsh_fixed3" -> Set("embeddings"),
-    "ann_sign_lsh_tuned"  -> Set("embeddings"),
-    "pq_adc_flat"         -> Set("embeddings"),
-    "ivfpq_tuned"         -> Set("embeddings"),
-    "bpe_train"           -> Set.empty,
-    "audio_neardup_32"    -> Set("documents"),
-    "audio_neardup_61"    -> Set("documents"),
-    "audio_neardup_derived" -> Set("documents"),
-    "audio_neardup_wide"  -> Set("documents"),
-    "image_neardup"       -> Set("documents"),
-    "image_index_steady"  -> Set("documents"),
-    "ivm_maintain"        -> Set("liagg_g", "cdcfeed_g"),
-    "ivm_recompute"       -> Set("lineitem"),
-    "ivm_feed"            -> Set("liagg_g", "cdcfeed_g"),
-    "medallion_increment" -> Set("lineitem"))
-
-  private val familyNames = familyTables.keySet
+  // the batches of the three text steady families must be near-dup-free
+  // against every corpus replica: they rotate with (r1, r2 >= 1), the pairs
+  // ScaleCorpus gives replicas >= 10, so those families need f <= 10
+  private val textSteady = Set("index_search_steady", "index_append_steady", "fuzzy_ingest_steady")
+  private val textSteadyMax = ScaleCorpus.alphabet.length
 
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(a => a.toIntOption.getOrElse(
       sys.error(s"usage: ScaleBench [replicas] [family...] — got '$a' " +
         "where the replica count goes"))).getOrElse(10)
     // optional family-name filter (exact match) after the replica count —
-    // lets a new family be measured without re-running the whole sweep.
-    // Validated against the static name set: a typo would otherwise build
-    // every fixture, measure NOTHING, and exit 0 looking like success.
+    // lets a new family be measured without re-running the whole sweep
     val only = args.drop(1).toSet
-    val unknown = only.diff(familyNames)
-    require(unknown.isEmpty,
-      s"unknown families: ${unknown.mkString(",")} (known: ${familyNames.toSeq.sorted.mkString(",")})")
+    def on(names: String*) = only.isEmpty || names.exists(only)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // corpora this run actually reads (empty filter = every family)
-    val needed: Set[String] =
-      (if (only.isEmpty) familyNames else only).flatMap(familyTables)
-    // docReplica's single rotation stops being injective past the alphabet
-    // length — refuse loudly rather than bench a byte-identical clone
-    // flood. Only the DOCUMENT corpus has this bound (embedding jitter and
-    // id offsets are injective at any factor), so a documents-free family
-    // filter may scale further.
-    require(replicas <= alphabet.length || !needed("documents"),
-      s"document families support at most ${alphabet.length} replicas (text " +
-        s"rotation injectivity); for larger factors use graft.ScaleCorpus, whose " +
-        s"composed two-alphabet rotation is injective to " +
-        s"${alphabet.length * alphabet2.length}×, or filter to non-document families")
-    val spark = Sessions.local()
-    import spark.implicits._
-
-    val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "text")
-    val emb  = Tables.t(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val li   = Tables.t(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_quantity")
-    val ord  = Tables.t(spark, sfDir, "orders").select("o_orderkey", "o_custkey")
-
-    // the lineitem corpus also feeds the liagg_g/cdcfeed_g fixtures
-    val needLineitem = Seq("lineitem", "liagg_g", "cdcfeed_g").exists(needed)
     val factors = Seq(1, replicas).distinct
-    for (f <- factors) {
-      if (needed("documents"))
-        writeOnce(replicate(docs, f, docReplica), corpusDir(sfDir, "documents", f))
-      if (needed("embeddings"))
-        writeOnce(replicate(emb, f, embReplica), corpusDir(sfDir, "embeddings", f))
-      if (needLineitem) writeOnce(
-        // l_extendedprice gets sub-cent deterministic jitter (replica 0
-        // identity) so the exact_quantiles family's distinct-value domain
-        // grows ∝ rows — identical-value replicas would probe the
-        // per-value collapse, the one axis a quantile CDF is insensitive to
-        replicate(li, f, (d, i) => d.select(
-          (col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
-          (col("l_suppkey") + lit(i * 10000000L)).as("l_suppkey"),
-          (if (i == 0) col("l_extendedprice")
-           else col("l_extendedprice") +
-             pmod(hash(col("l_orderkey"), col("l_quantity"), lit(i)), lit(1000003)) /
-               lit(1.0e9)).as("l_extendedprice"),
-          col("l_quantity"))),
-        corpusDir(sfDir, "lineitem", f))
-      // disjoint graph copies: same degree distribution, f x edges
-      if (needed("edges")) writeOnce(
-        replicate(
-          ord.join(li, col("o_orderkey") === col("l_orderkey"))
-            .select(col("o_custkey").as("c"), col("l_suppkey").as("s")).distinct(),
-          f,
-          (d, i) => d.select(
-            (col("c") + lit(i * 10000000L)).as("c"),
-            (col("s") + lit(i * 10000000L)).as("s"))),
-        corpusDir(sfDir, "edges", f))
-    }
+    require(replicas <= textSteadyMax || (only.nonEmpty && only.intersect(textSteady).isEmpty),
+      s"${textSteady.toSeq.sorted.mkString(", ")} support at most $textSteadyMax replicas " +
+        "(their batch rotations are corpus replicas past that); filter to the other families")
+    val spark = Sessions.local()
 
-    def read(table: String, f: Int) = spark.read.parquet(corpusDir(sfDir, table, f))
+    lazy val dir: Map[Int, String] = factors.map(f =>
+      f -> ScaleCorpus.build(spark, sfDir, f, ScaleCorpus.defaultDir(sfDir, f))).toMap
+    def read(table: String, f: Int) = Tables.t(spark, dir(f), table)
+    // derived-fixture key: the corpus dir's name, a table-name-safe identifier
+    def tag(f: Int) = new java.io.File(dir(f)).getName.replaceAll("[^A-Za-z0-9]", "_")
+    def fixture(f: Int, name: String) = Tables.targetPath(s"scale_bench/${tag(f)}/$name")
 
     // IVM fixture: the stored per-group (sum, count) view of lineitem at
     // each factor, plus change feeds. The GROUP DOMAIN stays fixed as the
-    // table scales: the lineitem replicas offset l_suppkey (disjointness
-    // for other fixtures), which would multiply GROUPS by f and make the
-    // maintenance join — ∝ groups — track the table; undoing the offset
-    // (mod the replica stride) gives the realistic shape where a 10×
-    // table has 10× rows per group, not 10× groups. Claims under test:
-    // applying a fixed feed costs O(changes + groups) regardless of table
-    // size (`ivm_maintain` vs `ivm_recompute`), and maintenance cost
-    // follows the FEED when the feed is what grows (`ivm_feed`: f× feed
-    // against the fixed 1× view).
+    // table scales: the replicas offset l_suppkey by ScaleCorpus's stride,
+    // which would multiply GROUPS by f and make the maintenance join — ∝
+    // groups — track the table; undoing the offset (mod the stride) gives
+    // the realistic shape where a 10× table has 10× rows per group, not 10×
+    // groups. Claims under test: applying a fixed feed costs O(changes +
+    // groups) regardless of table size (`ivm_maintain` vs `ivm_recompute`),
+    // and maintenance cost follows the FEED when the feed is what grows
+    // (`ivm_feed`: f× feed against the fixed 1× view).
     def ivmGroup(df: DataFrame) =
-      df.withColumn("g", pmod(col("l_suppkey"), lit(10000000L)))
-    if (Seq("liagg_g", "cdcfeed_g").exists(needed)) {
-      for (f <- factors)
-        writeOnce(Summaries.sumCountAgg(ivmGroup(read("lineitem", f)),
-          Seq("g"), col("l_extendedprice")), corpusDir(sfDir, "liagg_g", f))
-      for (f <- factors)
-        writeOnce(
-          ivmGroup(read("lineitem", f)).filter(col("l_orderkey") % 59 === 0)
-            .select(col("g"), col("l_extendedprice"),
-              when(col("l_orderkey") % 118 === 0, "insert").otherwise("delete").as("change")),
-          corpusDir(sfDir, "cdcfeed_g", f))
+      df.withColumn("g", pmod(col("l_suppkey"), lit(ScaleCorpus.Stride)))
+    def liagg(f: Int)  = spark.read.parquet(fixture(f, "liagg_g"))
+    def cdcfeed(f: Int) = spark.read.parquet(fixture(f, "cdcfeed_g"))
+    if (on("ivm_maintain", "ivm_feed")) for (f <- factors) {
+      Summaries.sumCountAgg(ivmGroup(read("lineitem", f)), Seq("g"), col("l_extendedprice"))
+        .write.mode("overwrite").parquet(fixture(f, "liagg_g"))
+      ivmGroup(read("lineitem", f)).filter(col("l_orderkey") % 59 === 0)
+        .select(col("g"), col("l_extendedprice"),
+          when(col("l_orderkey") % 118 === 0, "insert").otherwise("delete").as("change"))
+        .write.mode("overwrite").parquet(fixture(f, "cdcfeed_g"))
     }
-
-    // corpus row counts per factor, resolved OUTSIDE the timed region so
-    // the tuned-ANN family is not charged a full scan the fixed family
-    // doesn't pay (lazy: only embedding families force it)
-    lazy val embCount: Map[Int, Long] =
-      factors.map(f => f -> read("embeddings", f).count()).toMap
 
     // Steady-state persisted-index fixture (round-9 verdict item 5): the
     // suite's ×N points rebuild indices per run, so they certify BUILD
@@ -230,22 +88,20 @@ object ScaleBench {
     // The timed families then hold the INCREMENT fixed (one 1×-sized
     // batch) while the indexed corpus grows f× — flat timings are the
     // "cost ∝ increment, not corpus" claim. Batch texts compose a second
-    // disjoint-alphabet rotation no corpus replica uses (replicas are
-    // rot1-only), so the batch is near-dup-free against every factor and
-    // the search measures the steady-state miss path, not a dup flood.
-    val steadyTag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    def steadyPrefix(f: Int) = s"steady_${steadyTag}_f$f"
+    // rotation (r2 >= 1) that no replica below 10 uses (`textSteady`), so
+    // the batch is near-dup-free against every factor and the search
+    // measures the steady-state miss path, not a dup flood.
+    def steadyPrefix(f: Int) = s"steady_${tag(f)}"
     def steadyBatch(j: Int): DataFrame = {
+      import ScaleCorpus.{alphabet, alphabet2}
       def rotate(a: String, kk: Int) = a.drop(kk % a.length) + a.take(kk % a.length)
       val r1 = rotate(alphabet, j % alphabet.length)
       val r2 = rotate(alphabet2, 1 + (j / alphabet.length) % (alphabet2.length - 1))
       read("documents", 1).select(
-        (col("doc_id") + lit((1000L + j) * 10000000L)).as("doc_id"),
+        (col("doc_id") + lit((1000L + j) * ScaleCorpus.Stride)).as("doc_id"),
         translate(translate(col("text"), alphabet, r1), alphabet2, r2).as("text"))
     }
-    val steadyOn = only.isEmpty ||
-      only.contains("index_search_steady") || only.contains("index_append_steady")
-    if (steadyOn) for (f <- factors)
+    if (on("index_search_steady", "index_append_steady")) for (f <- factors)
       Text.writeMinhashIndex(read("documents", f), "doc_id", "text", 3, 16,
         steadyPrefix(f), buckets = 32, mode = "overwrite")
     // each timed append consumes a globally-fresh batch so no run re-appends
@@ -264,13 +120,15 @@ object ScaleBench {
     // replica stride vanishes mod 100). The feed is the KNOWN batch, not a
     // TxTable.diff — diff is O(snapshot scan) by construction and belongs
     // to the recovery path, not the steady-state loop.
-    def medRoot(f: Int) = Tables.targetPath(s"scale_tx/${steadyTag}_f$f")
+    def medRoot(f: Int) = fixture(f, "medallion")
+    def medBase(f: Int) =
+      read("lineitem", f).select("l_orderkey", "l_suppkey", "l_extendedprice", "l_quantity")
     def medSilver(df: DataFrame) = df
       .withColumn("gross", col("l_extendedprice") * col("l_quantity"))
       .withColumn("g", pmod(col("l_suppkey"), lit(100L)))
-    val medOn = only.isEmpty || only.contains("medallion_increment")
+    val medOn = on("medallion_increment")
     if (medOn) for (f <- factors) if (!TxTable.exists(spark, medRoot(f))) {
-      val b = read("lineitem", f)
+      val b = medBase(f)
       TxTable.commit(spark, medRoot(f), Seq(
         ("bronze", "replace", b),
         ("silver", "replace", medSilver(b)),
@@ -296,18 +154,17 @@ object ScaleBench {
     // reset to an empty slice per run (corpus CONTENT never enters the
     // loop's cost — the index does; an empty root keeps the append
     // replay-clean across invocations with no seeding arithmetic).
-    def fuzzyPrefix(f: Int) = s"fuzzy_${steadyTag}_f$f"
-    def fuzzyRoot(f: Int)   = Tables.targetPath(s"scale_tx/fuzzy_${steadyTag}_f$f")
-    val fuzzyOn = only.isEmpty || only.contains("fuzzy_ingest_steady")
-    if (fuzzyOn) for (f <- factors) {
+    def fuzzyPrefix(f: Int) = s"fuzzy_${tag(f)}"
+    def fuzzyRoot(f: Int)   = fixture(f, "fuzzy_corpus")
+    if (on("fuzzy_ingest_steady")) for (f <- factors) {
       Text.writeMinhashIndex(read("documents", f), "doc_id", "text", 3, 16,
         fuzzyPrefix(f), buckets = 32, mode = "overwrite")
-      TxTable.commit(spark, fuzzyRoot(f),
-        Seq((TxTable.SingleTable, "replace", read("documents", 1).limit(0))))
+      TxTable.commit(spark, fuzzyRoot(f), Seq((TxTable.SingleTable, "replace",
+        read("documents", 1).select("doc_id", "text").limit(0))))
     }
     // fuzzy batches draw from a j-range disjoint from the index families'
     // (distinct rotation pairs → mutually non-near-dup, and non-near-dup
-    // against every rot1-keyed corpus replica)
+    // against every corpus replica below 10)
     var fuzzySeq = 0
 
     // Steady-state IMAGE-INDEX fixture (the raster lane's measured scale
@@ -319,9 +176,8 @@ object ScaleBench {
     // id range. Flat timings across factors are the "probe cost follows
     // the batch, the corpus-side index is bucket-pruned and never
     // exchanged" claim — index_search_steady's shape on the raster lane.
-    def imgPrefix(f: Int) = s"imgidx_${steadyTag}_f$f"
-    val imgOn = only.isEmpty || only.contains("image_index_steady")
-    if (imgOn) for (f <- factors)
+    def imgPrefix(f: Int) = s"imgidx_${tag(f)}"
+    if (on("image_index_steady")) for (f <- factors)
       graft.ops.Multimodal.writeImageDHashIndex(
         read("documents", f)
           .select(col("doc_id"), Shared.pngPayloadCol.as("payload")),
@@ -329,39 +185,6 @@ object ScaleBench {
         tablePrefix = imgPrefix(f), buckets = 32)
 
     def families(f: Int): Seq[(String, () => Long)] = Seq(
-      ("lsh_minhash", () =>
-        Text.minhashNearDupPairs(read("documents", f), "doc_id", "text", 3, 16, 0.5).count()),
-      ("lsh_simhash", () =>
-        Text.simhashNearDupPairs(read("documents", f), "doc_id", "text").count()),
-      ("jaccard_inverted", () =>
-        Text.jaccardNearDupPairs(read("documents", f), "doc_id", "text", 3, 0.5).count()),
-      ("exact_quantiles", () =>
-        Summaries.exactQuantileArrays(read("lineitem", f), Seq(
-          ("l_extendedprice", Seq(0.25, 0.5, 0.75, 0.95), "price_q"),
-          ("l_quantity", Seq(0.25, 0.5, 0.75, 0.95), "qty_q"))).count()),
-      ("pagerank", () => {
-        val e0 = read("edges", f)
-        val e = e0.union(e0.select(col("s").as("c"), col("c").as("s")))
-        Graph.pageRankInt(e, "c", "s", iterations = 3, pinEvery = 3).count()
-      }),
-      // the suite's LPA shape at its historical 3 sync rounds (q177
-      // itself trimmed to 2 in round 15 for suite headroom) so the
-      // family's growth curve stays comparable across rounds
-      ("label_propagation", () =>
-        Graph.labelPropagation(read("edges", f), "c", "s",
-          iterations = 3, pinEvery = 3).count()),
-      // asymmetric doc-in-doc overlap (q143): same inverted-index +
-      // prefix-filter machinery as jaccard_inverted but the containment
-      // threshold keeps far more of the candidate mass — its own curve
-      ("containment", () =>
-        Text.containmentPairs(read("documents", f), "doc_id", "text", 3, 0.5).count()),
-      ("ann_sign_lsh_fixed3", () =>
-        Similarity.annTopK(read("embeddings", f), "vec_id", "embedding", 3, 3,
-          nTables = 12, maxBucket = 2000).count()),
-      ("ann_sign_lsh_tuned", () =>
-        Similarity.annTopK(read("embeddings", f), "vec_id", "embedding",
-          Similarity.annPlanesFor(embCount(f)), 3,
-          nTables = 12, maxBucket = 2000).count()),
       // flat ADC: every vector probes ALL stored codes — O(n²) candidate
       // pairs by construction, the PQ analogue of fixed-plane sign-LSH
       ("pq_adc_flat", () => {
@@ -380,14 +203,6 @@ object ScaleBench {
         Similarity.rankTopK(
           enc.join(probes, col("probe_id") =!= col("neighbor_id"))
             .select(col("probe_id"), col("neighbor_id"), d6.as("sim")), 3).count()
-      }),
-      // the scale path: the same codes behind ivfCellsFor-sized cell
-      // pruning — candidates O(n^1.5) instead of O(n²)
-      ("ivfpq_tuned", () => {
-        val e = read("embeddings", f)
-        val cb = graft.ops.Clustering.pqTrain(e, "vec_id", "embedding", 2, 16, 1)
-        Similarity.ivfPqTopK(e, "vec_id", "embedding", cb,
-          Similarity.ivfCellsFor(embCount(f), 2), 3, nProbe = 2).count()
       }),
       // Hamming-banded audio near-dup at the q202 default geometry
       // (lanes 32 → 31 hash bits → 11/11/9-bit band keys): with ~2^11
@@ -454,22 +269,22 @@ object ScaleBench {
       // distributed (maxDriverVocab = 0) — the driver-side path is not
       // the 100 TB shape under test.
       ("bpe_train", () =>
-        Text.bpeTrainImpl(docs, "text", merges = 8 * f, maxDriverVocab = 0L).count()),
+        Text.bpeTrainImpl(read("documents", 1), "text", merges = 8 * f, maxDriverVocab = 0L)
+          .count()),
       // incremental view maintenance: apply the FIXED change feed to the
       // stored view of the f× table — with the group domain held fixed,
       // cost must not follow the table (grows with groups, not rows)
       ("ivm_maintain", () =>
-        Summaries.maintainSumCount(read("liagg_g", f), read("cdcfeed_g", 1),
+        Summaries.maintainSumCount(liagg(f), cdcfeed(1),
           Seq("g"), col("l_extendedprice")).count()),
       // the alternative every increment would otherwise pay
       ("ivm_recompute", () =>
         Summaries.sumCountAgg(
-          read("lineitem", f).withColumn("g", pmod(col("l_suppkey"), lit(10000000L))),
-          Seq("g"), col("l_extendedprice")).count()),
+          ivmGroup(read("lineitem", f)), Seq("g"), col("l_extendedprice")).count()),
       // the feed-side axis: an f× feed against the FIXED 1× view — the
       // O(changes) claim read the other way (cost follows the feed)
       ("ivm_feed", () =>
-        Summaries.maintainSumCount(read("liagg_g", 1), read("cdcfeed_g", f),
+        Summaries.maintainSumCount(liagg(1), cdcfeed(f),
           Seq("g"), col("l_extendedprice")).count()),
       // steady-state index SEARCH: a fixed 1×-sized batch probes the f×
       // persisted index. Idempotent (read-only), so min-of-3 is honest.
@@ -519,9 +334,8 @@ object ScaleBench {
       ("medallion_increment", () => {
         medSeq += 1
         val root = medRoot(f)
-        val batch = read("lineitem", 1).select(
-          (col("l_orderkey") + lit((5000L + medSeq) * 100000000L)).as("l_orderkey"),
-          col("l_suppkey"), col("l_extendedprice"), col("l_quantity"))
+        val batch = medBase(1).withColumn("l_orderkey",
+          col("l_orderkey") + lit((5000L + medSeq) * 100000000L))
         val maintained = Summaries.maintainSumCount(
           TxTable.read(spark, root, "gold"),
           medSilver(batch).withColumn("change", lit("insert")),
@@ -533,23 +347,24 @@ object ScaleBench {
         TxTable.read(spark, root, "gold").count()
       })
     )
+    // every fixture above is gated on its families' selection, so a filter
+    // of mistyped names builds nothing before this refuses it
+    val known = families(1).map(_._1)
+    val unknown = only.diff(known.toSet)
+    require(unknown.isEmpty,
+      s"unknown families: ${unknown.mkString(",")} (known: ${known.sorted.mkString(",")})")
 
     // JIT/codegen/session warm-up outside the timed region, so factor 1
     // (which runs first) is not charged the whole JVM's cold start
-    if (needed("documents"))
-      Text.minhashNearDupPairs(read("documents", 1).limit(500),
-        "doc_id", "text", 3, 16, 0.5).count()
-    if (needed("embeddings"))
-      Similarity.annTopK(read("embeddings", 1).limit(500),
-        "vec_id", "embedding", 3, 3, nTables = 12).count()
-    else if (needLineitem) read("lineitem", 1).limit(500).count()
+    Text.minhashNearDupPairs(read("documents", 1).limit(500),
+      "doc_id", "text", 3, 16, 0.5).count()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
 
     for (f <- factors; (name, run) <- families(f)
          if only.isEmpty || only.contains(name)) {
       // min of THREE runs: the first pays codegen + scan warm-up, and a
       // single extra run proved too little insulation against transient
-      // session state (one sweep recorded a 61 s ivfpq_tuned at 1× whose
+      // session state (one sweep recorded a 61 s IVF-PQ family at 1× whose
       // direct replay measures ~3 s; min-of-3 with a pre-family GC keeps
       // one poisoned measurement from becoming the artifact)
       System.gc()

@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev utility: materialize a CONSISTENT ×N replication of the whole
-  * testdata directory, so the full 222-query suite can be benched at
-  * ~sf1 from an sf0.1 source (`BENCH_sfx10.json` / SCALING.md). The
-  * ScaleBench family probes scale one operator's input at a time; this
-  * scales every table AT ONCE with foreign keys kept valid, which is what
-  * the suite's join-shaped queries need:
+/** Dev utility, and the repo's one corpus replicator: materialize a
+  * CONSISTENT ×N replication of the whole testdata directory. Bench runs the
+  * full 222-query suite over it (the ×10/×100 points of SCALING.md), and
+  * [[ScaleBench]] reads its 1× and f× corpora for the operator families no
+  * query scales. Every table is scaled AT ONCE with foreign keys kept valid,
+  * which is what the suite's join-shaped queries need:
   *
   *  - every replica offsets each key DOMAIN by the same stride
   *    (`o_custkey` moves with `c_custkey`, `l_orderkey` with
@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
   *  - `region`/`nation` are copied once, not replicated — TPC-H dimension
   *    tables are fixed-size at every SF, and replica rows keep pointing
   *    at them;
-  *  - `documents.text` gets the per-replica alphabet rotation and
-  *    `embeddings.embedding` the deterministic jitter (both from
-  *    ScaleBench) so dedup/ANN statistics stay corpus-like instead of
-  *    measuring the pathological 10-way-clone path;
+  *  - `documents.text` gets a per-replica two-alphabet rotation (injective
+  *    to ×100) and `embeddings.embedding` a deterministic ±0.15 jitter keyed
+  *    by the offset `vec_id`, so dedup/ANN statistics stay corpus-like
+  *    instead of measuring the pathological N-way-clone path;
   *  - `events.value` / `lineitem.l_extendedprice` get sub-0.1%
   *    deterministic jitter so numeric DISTINCT domains grow ∝ rows —
   *    without it, domain-bound operators (CDFs, exact quantiles, heavy
@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   *    parquet, unsplittable — honest scan parallelism at 10× needs real
   *    files).
   *
-  * Usage: `runMain graft.ScaleCorpus [replicas] [outDir]` with
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1); then point Bench at the out dir.
+  * `ScaleCorpusSpec` pins this contract. Usage: `runMain graft.ScaleCorpus
+  * [replicas] [outDir]` with `SPARK_GRAFT_SF_DIR` (default sf0.1; out dir
+  * default [[defaultDir]]); then point Bench at the out dir.
   */
 object ScaleCorpus {
 
@@ -44,32 +45,43 @@ object ScaleCorpus {
   // appeared 3× byte-identical, re-introducing exactly the clone-flood
   // path SCALING.md claims is avoided. For i<10 the second rotation is
   // the identity, so ×10-and-below corpora are unchanged.
-  private val alphabet  = "aeiounstrl"
-  private val alphabet2 = "bcdfghjkmp"
-  private val Stride    = 10000000L // asserted per table below
+  private[graft] val alphabet  = "aeiounstrl"
+  private[graft] val alphabet2 = "bcdfghjkmp"
+  private[graft] val Stride    = 10000000L // asserted per table below
+
+  // per-table key columns that move together (the FK contract)
+  private[graft] val keyCols: Map[String, Seq[String]] = Map(
+    "customer"   -> Seq("c_custkey"),
+    "supplier"   -> Seq("s_suppkey"),
+    "part"       -> Seq("p_partkey"),
+    "orders"     -> Seq("o_orderkey", "o_custkey"),
+    "lineitem"   -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "events"     -> Seq("event_id", "user_id"),
+    "documents"  -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
+  /** The default home of the ×n corpus of `sfDir`: one dir per (source, n). */
+  def defaultDir(sfDir: String, n: Int): String = {
+    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    Tables.targetPath(s"scale_suite/${tag}_x$n")
+  }
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toIntOption).getOrElse(10)
-    require(n >= 1 && n <= 100, "replicas in [1, 100]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = args.drop(1).headOption.getOrElse {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      Tables.targetPath(s"scale_suite/${tag}_x$n")
-    }
+    val outDir = args.drop(1).headOption.getOrElse(defaultDir(sfDir, n))
     val spark = Sessions.local()
+    build(spark, sfDir, n, outDir)
+    spark.stop()
+  }
 
+  /** Write the ×n corpus of `sfDir` to `outDir` and return `outDir`.
+    * Write-once per table: a table whose `_SUCCESS` marker exists is reused,
+    * so every caller of one (source, n) shares one corpus.
+    */
+  def build(spark: SparkSession, sfDir: String, n: Int, outDir: String): String = {
+    require(n >= 1 && n <= 100, "replicas in [1, 100]")
     def off(c: String, i: Int): Column = col(c) + lit(i * Stride)
-    // per-table key columns that move together (the FK contract)
-    val keyCols: Map[String, Seq[String]] = Map(
-      "customer"   -> Seq("c_custkey"),
-      "supplier"   -> Seq("s_suppkey"),
-      "part"       -> Seq("p_partkey"),
-      "orders"     -> Seq("o_orderkey", "o_custkey"),
-      "lineitem"   -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
-      "events"     -> Seq("event_id", "user_id"),
-      "documents"  -> Seq("doc_id"),
-      "embeddings" -> Seq("vec_id"))
-
     def replica(name: String, df: DataFrame, i: Int): DataFrame = {
       val keyed = keyCols(name).foldLeft(df)((d, k) => d.withColumn(k, off(k, i)))
       name match {
@@ -145,6 +157,6 @@ object ScaleCorpus {
         parts = 32)
     }
     println(s"[scalecorpus] done: $outDir (x$n of $sfDir)")
-    spark.stop()
+    outDir
   }
 }

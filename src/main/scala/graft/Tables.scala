@@ -37,9 +37,11 @@ object Tables {
   }
 
   /** `rel` resolved under the working directory's `target/` — the home of
-    * the engine's on-disk fixtures (CDC/medallion/zorder roots, ScaleCorpus
-    * and ScaleBench corpora), the way `spark-warehouse/` resolves under it:
-    * each checkout keeps its own fixtures.
+    * every on-disk fixture: CDC/medallion/zorder roots, ScaleCorpus corpora
+    * (`scale_suite/`), ScaleBench's derived fixtures (`scale_bench/`) and the
+    * test suites' scratch files (`tmp/`). It resolves the way
+    * `spark-warehouse/` does, so each checkout keeps its own fixtures;
+    * `ContractSpec` fails on a source literal that points into a fixed one.
     */
   def targetPath(rel: String): String = new java.io.File("target", rel).getAbsolutePath
 

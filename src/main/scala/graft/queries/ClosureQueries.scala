@@ -2479,8 +2479,9 @@ object ClosureQueries {
       // community detection over a reporting window; the date predicate
       // pushes to the orders scan and bounds the edge set BEFORE the
       // join): what q177 exercises is the fixed-round LPA contract, which
-      // is window-independent — convergence depth lives in q199, and
-      // ScaleBench's label_propagation family keeps the unbounded graph
+      // is window-independent — convergence depth lives in q199. The window
+      // keeps every replica of a ScaleCorpus corpus, so the edge set grows
+      // with the factor: Bench over ×N is LPA's scale measurement
       val pairs = t(s, d, "orders")
         .filter(col("o_orderdate") < lit("1996-01-01"))
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
@@ -2496,9 +2497,7 @@ object ClosureQueries {
       // measured at sf0.1 vs ~4.8 s pinned per round). 2 fixed rounds
       // (was 3): the suite's slowest query by a wide margin, and the
       // fixed-round CONTRACT — not a particular depth — is what q177
-      // exercises; 10-round convergence depth lives in q199, and
-      // ScaleBench's label_propagation family keeps the historical 3-round
-      // shape so its growth curve stays comparable across rounds.
+      // exercises; 10-round convergence depth lives in q199.
       Graph.labelPropagation(pairs, "a", "b", iterations = 2, pinEvery = 2)
         .select(nodeStr(col("v")).as("node"), nodeStr(col("label")).as("community"))
         .orderBy(col("community"), col("node"))

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver contract itself: SparkEntry's shape and smoke behavior, so a
@@ -120,5 +125,23 @@ class ContractSpec extends AnyFunSuite {
     val a  = SparkEntry.queries("q56_decode_features")(spark, sf).collect().toSeq
     val b  = SparkEntry.queries("q56_decode_features")(spark, sf).collect().toSeq
     assert(a == b)
+  }
+
+  test("no source or tool names an absolute path into a checkout") {
+    // this checkout's own path anywhere, or a string literal into any
+    // checkout's `target/` (so a copy of the repo elsewhere still catches a
+    // literal naming the original); fixtures go through Tables.targetPath
+    val here  = new java.io.File(".").getCanonicalPath
+    val fixed = (java.util.regex.Pattern.quote(here) + "(?![\\w.-])|\"/[^\"\\s]*/target/").r
+    val roots = Seq(Paths.get("src"), Paths.get("tools"))
+    assert(roots.forall(Files.isDirectory(_)), "run from the repository root (no src/ or tools/)")
+    val hits = roots.flatMap(r => Files.walk(r).iterator.asScala)
+      .filter(Files.isRegularFile(_))
+      .flatMap { p =>
+        new String(Files.readAllBytes(p), UTF_8).linesIterator.zipWithIndex.collect {
+          case (line, i) if fixed.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(hits.isEmpty, hits.mkString("absolute checkout paths:\n", "\n", ""))
   }
 }

@@ -12,7 +12,7 @@ class ExcelSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String) =
-    s"/root/repo/target/tmp/${name}_${System.nanoTime()}.xlsx"
+    Tables.targetPath(s"tmp/${name}_${System.nanoTime()}.xlsx")
 
   test("colIndex / colRef round-trip") {
     assert(Excel.colIndex("A1") == 0 && Excel.colIndex("Z9") == 25 && Excel.colIndex("AA3") == 26)

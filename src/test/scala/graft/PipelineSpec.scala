@@ -73,7 +73,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("exportCatalogPartitioned writes hive-partitioned output with pruning") {
-    val dir = s"/root/repo/target/tmp/pipeline_part_${System.nanoTime()}"
+    val dir = Tables.targetPath(s"tmp/pipeline_part_${System.nanoTime()}")
     Pipeline.exportCatalogPartitioned(catalog, dir,
       Map("base_limpa" -> Seq("endpoint_type")))
     val back = spark.read.parquet(s"$dir/base_limpa")
@@ -86,7 +86,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("exportCatalog writes one parquet dir per table (S6)") {
-    val dir = s"/root/repo/target/tmp/pipeline_export_${System.nanoTime()}"
+    val dir = Tables.targetPath(s"tmp/pipeline_export_${System.nanoTime()}")
     Pipeline.exportCatalog(catalog, dir)
     assert(catalog.size == 4)
     assert(new java.io.File(dir).list().toSet == catalog.keySet)

@@ -116,7 +116,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned write → filtered read prunes partitions at the source") {
-    val base = s"/root/repo/target/tmp/part_events_${System.nanoTime()}"
+    val base = Tables.targetPath(s"tmp/part_events_${System.nanoTime()}")
     Tables.t(spark, sf, "events")
       .select("event_id", "ts", "user_id", "event_type")
       .write.partitionBy("event_type").parquet(base)

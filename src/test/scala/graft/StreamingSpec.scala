@@ -248,7 +248,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
-    val base  = s"/root/repo/target/tmp/stream_sink_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/stream_sink_${System.nanoTime()}")
     val q = Streaming.dedupEvents(input.toDF(), "ts", "1 hour", Seq("user_id"))
       .writeStream.format("parquet")
       .option("path", s"$base/data")
@@ -291,7 +291,7 @@ class StreamingSpec extends AnyFunSuite {
     // exactly what the static read computes.
     val events = Tables.t(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "ts", "user_id", "event_type")
-    val base = s"/root/repo/target/tmp/file_stream_${System.nanoTime()}"
+    val base = Tables.targetPath(s"tmp/file_stream_${System.nanoTime()}")
     events.write.parquet(s"$base/in")
     val src    = spark.readStream.schema(events.schema).parquet(s"$base/in")
     val counts = Streaming.tumblingCounts(src, "ts", "1 day", "2 days", Seq("event_type"))
@@ -309,7 +309,7 @@ class StreamingSpec extends AnyFunSuite {
   test("incrementalDedupSink grows a corpus without re-admitting seen content") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base  = s"/root/repo/target/tmp/incdedup_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/incdedup_${System.nanoTime()}")
     val input = MemoryStream[(Long, String)]
     val q = Streaming.incrementalDedupSink(
       input.toDF().toDF("id", "content"), s"$base/corpus", "content", "id", s"$base/ckpt")
@@ -327,7 +327,7 @@ class StreamingSpec extends AnyFunSuite {
   test("fuzzyIngestSink: near-dups blocked within and across batches; index grows with the corpus") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base   = s"/root/repo/target/tmp/fuzzying_${System.nanoTime()}"
+    val base   = Tables.targetPath(s"tmp/fuzzying_${System.nanoTime()}")
     val prefix = s"fuzzying_idx_${System.nanoTime()}"
     val input  = MemoryStream[(Long, String)]
     val doc1   = "the quick brown fox jumps over the lazy dog tonight again"
@@ -369,7 +369,7 @@ class StreamingSpec extends AnyFunSuite {
   test("audioIngestSink: dHash near-dups blocked within and across batches; index grows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base   = s"/root/repo/target/tmp/audioing_${System.nanoTime()}"
+    val base   = Tables.targetPath(s"tmp/audioing_${System.nanoTime()}")
     val prefix = s"audioing_idx_${System.nanoTime()}"
     def clip(seed: Int, off: Int): Array[Byte] = {
       // the MultimodalSpec wavBytes shape, inlined: 16-bit mono PCM
@@ -418,7 +418,7 @@ class StreamingSpec extends AnyFunSuite {
   test("imageIngestSink: the raster head rides the same lifecycle") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base   = s"/root/repo/target/tmp/imaging_${System.nanoTime()}"
+    val base   = Tables.targetPath(s"tmp/imaging_${System.nanoTime()}")
     val prefix = s"imaging_idx_${System.nanoTime()}"
     // tiny in-spec PNG builder (filter 0, stored rows via java Deflater)
     def png(seed: Int, off: Int): Array[Byte] = {
@@ -465,7 +465,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    val base  = s"/root/repo/target/tmp/qgate_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/qgate_${System.nanoTime()}")
     val input = MemoryStream[(Long, Option[Double])]
     // frozen model: sigma(4*x) -> x > 0 accepted at threshold 0.5; a NULL
     // feature yields a NULL score and must land in rejected
@@ -491,7 +491,7 @@ class StreamingSpec extends AnyFunSuite {
   test("upsertSink merges micro-batches: replace, insert, in-batch version resolve") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base  = s"/root/repo/target/tmp/upsert_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/upsert_${System.nanoTime()}")
     val input = MemoryStream[(Long, String, Long)]
     val q = Streaming.upsertSink(
       input.toDF().toDF("k", "s", "v"), s"$base/table", Seq("k"), "v", s"$base/ckpt")
@@ -509,7 +509,7 @@ class StreamingSpec extends AnyFunSuite {
   test("burstAlertSink: counts merge across batches and alerts refresh atomically with them") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base  = s"/root/repo/target/tmp/burst_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/burst_${System.nanoTime()}")
     def ts(day: Int): java.sql.Timestamp =
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 12:00:00")
     val input = MemoryStream[(java.sql.Timestamp, String)]
@@ -541,7 +541,7 @@ class StreamingSpec extends AnyFunSuite {
   test("aggStateSink maintains the state table: merged state equals full re-aggregation") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base  = s"/root/repo/target/tmp/aggstate_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/aggstate_${System.nanoTime()}")
     val input = MemoryStream[(String, Double)]
     val q = Streaming.aggStateSink(
       input.toDF().toDF("k", "v"), s"$base/state", Seq("k"), Seq("v"), s"$base/ckpt")
@@ -561,7 +561,7 @@ class StreamingSpec extends AnyFunSuite {
   test("cdcAggSink retracts: the maintained view tracks a mutating upstream exactly") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base  = s"/root/repo/target/tmp/cdcagg_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/cdcagg_${System.nanoTime()}")
     val input = MemoryStream[(String, Double, String)]
     val q = Streaming.cdcAggSink(
       input.toDF().toDF("g", "v", "change"), s"$base/state", Seq("g"), "v", s"$base/ckpt")
@@ -594,7 +594,7 @@ class StreamingSpec extends AnyFunSuite {
     // covers deliberate claim contention; this covers the streaming path.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = s"/root/repo/target/tmp/multisink_${System.nanoTime()}"
+    val base = Tables.targetPath(s"tmp/multisink_${System.nanoTime()}")
     val in1  = MemoryStream[Long]
     val in2  = MemoryStream[Long]
     def sink(s: org.apache.spark.sql.DataFrame, ck: String, guard: String) =
@@ -662,7 +662,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Seq[Float])]
-    val base  = s"/root/repo/target/tmp/kmeans_sink_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/kmeans_sink_${System.nanoTime()}")
     val q = Streaming.kmeansSink(input.toDF().toDF("id", "vec"), "id", "vec", 2,
       s"$base/state", s"$base/ckpt")
     try {
@@ -694,7 +694,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Seq[Float])]
-    val base  = s"/root/repo/target/tmp/kmeans_topup_${System.nanoTime()}"
+    val base  = Tables.targetPath(s"tmp/kmeans_topup_${System.nanoTime()}")
     val q = Streaming.kmeansSink(input.toDF().toDF("id", "vec"), "id", "vec", 3,
       s"$base/state", s"$base/ckpt")
     try {
@@ -716,7 +716,7 @@ class StreamingSpec extends AnyFunSuite {
   test("jsonQuarantineStream routes good rows to parquet, bad lines to the reject sink") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val base = s"/root/repo/target/tmp/jsonqs_${System.nanoTime()}"
+    val base = Tables.targetPath(s"tmp/jsonqs_${System.nanoTime()}")
     val in   = java.nio.file.Paths.get(s"$base/in")
     java.nio.file.Files.createDirectories(in)
     java.nio.file.Files.write(in.resolve("f1.jsonl"), java.util.Arrays.asList(

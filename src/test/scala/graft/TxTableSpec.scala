@@ -11,7 +11,7 @@ import graft.ops.TxTable
 class TxTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def base() = s"/root/repo/target/tmp/tx_${System.nanoTime()}"
+  private def base() = Tables.targetPath(s"tmp/tx_${System.nanoTime()}")
 
   private def readSum(root: String, table: String = TxTable.SingleTable) = {
     import spark.implicits._
@@ -476,7 +476,7 @@ class TxTableSpec extends AnyFunSuite {
     val q = SparkEntry.queries("q167b_medallion_incremental")
     val sf = "/root/testdata/sf0.001"
     val r1 = q(spark, sf).collect().toSeq
-    val root = s"/root/repo/target/tmp/medinc_" + sf.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = Tables.targetPath("tmp/medinc_" + sf.replaceAll("[^0-9a-zA-Z]", "_"))
     val vsAfterFirst = TxTable.versions(spark, root)
     val r2 = q(spark, sf).collect().toSeq
     assert(TxTable.versions(spark, root) == vsAfterFirst,
