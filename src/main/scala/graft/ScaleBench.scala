@@ -216,8 +216,10 @@ object ScaleBench {
           "doc_id", "payload", lanes = 32, maxHamming = 2).count()),
       // the corpus-scale mitigation: lanes 61 → 60 bits → 20-bit band
       // keys, ~2^20 buckets per band — occupancy (and with it the
-      // quadratic term) collapses; this is the geometry a 100 TB audio
-      // dedup runs, exactly as annPlanesFor widens sign-LSH keys with n
+      // quadratic term) collapses; this is the geometry dHashLanesFor
+      // reaches at ~2.6·10^8 clips (maxHamming 2), exactly as annPlanesFor
+      // widens sign-LSH keys with n — past it the rule adds the second
+      // hash word (the wide member below)
       ("audio_neardup_61", () =>
         graft.ops.Multimodal.audioNearDupPairs(
           read("documents", f).select(col("doc_id"), Shared.wavPayloadCol.as("payload")),
@@ -234,11 +236,12 @@ object ScaleBench {
       }),
       // the two-word hash past the single-long boundary (101 lanes → 100
       // bits, maxHamming 3 → four 25-bit band keys, band 2 straddling the
-      // word boundary): the multi-word engine's scale point — band keys
-      // this wide keep occupancy sparse at ANY corpus the rule reaches,
-      // so the family should read flat like the 61-lane member
+      // word boundary), through the same audioNearDupPairs as the members
+      // above: band keys this wide keep occupancy sparse at ANY corpus
+      // the rule reaches, so the family should read flat like the 61-lane
+      // member
       ("audio_neardup_wide", () =>
-        graft.ops.Multimodal.audioNearDupPairsWide(
+        graft.ops.Multimodal.audioNearDupPairs(
           read("documents", f).select(col("doc_id"), Shared.wavPayloadCol.as("payload")),
           "doc_id", "payload", lanes = 101, maxHamming = 3).count()),
       // the raster twin of audio_neardup_32: real PNG pixel decode → grid

@@ -56,6 +56,24 @@ object Clustering {
     array_min(cands).getField("cid")
   }
 
+  /** Deterministic seeding shared by [[kmeans]] and the streaming
+    * [[graft.ops.Streaming.kmeansSink]]: the k smallest-id vectors whose
+    * dimension matches the FIRST valid vector's (a wrong-dim row among the
+    * smallest ids must not become a centroid — its null distances would
+    * win every argmin). Over-fetches 4k candidates so a few malformed
+    * rows cannot starve the seed set.
+    */
+  private[graft] def seedCentroids(df: DataFrame, idCol: String, vecCol: String,
+      k: Int): Seq[Seq[Double]] = {
+    val cand = df.filter(col(vecCol).isNotNull)
+      .orderBy(col(idCol)).limit(math.max(4 * k, k)).select(col(vecCol)).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toIndexedSeq)
+    cand.headOption match {
+      case None    => Seq.empty
+      case Some(h) => cand.filter(_.length == h.length).take(k).map(v => v: Seq[Double]).toSeq
+    }
+  }
+
   /** Lloyd's k-means over an embedding column: k deterministic seeds (the
     * rows with the k smallest ids — content-addressed, replayable), then
     * `iters` rounds of assign → recompute means.
@@ -76,24 +94,6 @@ object Clustering {
     *         assignment pass; the centroids are the means of exactly those
     *         clusters.
     */
-  /** Deterministic seeding shared by [[kmeans]] and the streaming
-    * [[graft.ops.Streaming.kmeansSink]]: the k smallest-id vectors whose
-    * dimension matches the FIRST valid vector's (a wrong-dim row among the
-    * smallest ids must not become a centroid — its null distances would
-    * win every argmin). Over-fetches 4k candidates so a few malformed
-    * rows cannot starve the seed set.
-    */
-  private[graft] def seedCentroids(df: DataFrame, idCol: String, vecCol: String,
-      k: Int): Seq[Seq[Double]] = {
-    val cand = df.filter(col(vecCol).isNotNull)
-      .orderBy(col(idCol)).limit(math.max(4 * k, k)).select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toIndexedSeq)
-    cand.headOption match {
-      case None    => Seq.empty
-      case Some(h) => cand.filter(_.length == h.length).take(k).map(v => v: Seq[Double]).toSeq
-    }
-  }
-
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int)
       : (DataFrame, Seq[(Int, Long, Seq[Double])]) = {
     require(k >= 1 && iters >= 1, "k and iters must be positive")

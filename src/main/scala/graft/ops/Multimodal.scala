@@ -113,15 +113,6 @@ object Multimodal {
       nSamples: Long, sumS: Long, sumSq: Long, peak: Long, zeroCross: Long,
       laneSums: Array[Long])
 
-  /** REAL WAV/PCM decode: walk RIFF chunks (fmt + data, even-size padding
-    * honored), decode 16-bit little-endian two's-complement samples, and
-    * fold them into [[Pcm]] features in one pass:
-    * `sum`, `sum of squares` (energy), `peak = max |s|`, sign-change count
-    * (zero crossings, `s == 0` counted non-negative), and `dim` per-lane
-    * sums (lane `j` accumulates samples `i ≡ j mod dim`) — the fixed-width
-    * vector downstream similarity ops consume. None for anything that is
-    * not a complete 16-bit PCM WAV.
-    */
   /** G.711 µ-law expansion table (the CCITT reference arithmetic, 16-bit
     * scale: byte 0x00 → −32124, 0x80 → +32124, 0xFF → 0) — telephony
     * corpora ship 8-bit companded WAV (fmt tag 7) far more often than
@@ -145,6 +136,15 @@ object Multimodal {
     (if ((a & 0x80) != 0) t else -t).toShort
   }
 
+  /** REAL WAV/PCM decode: walk RIFF chunks (fmt + data, even-size padding
+    * honored), decode 16-bit little-endian two's-complement samples, and
+    * fold them into [[Pcm]] features in one pass:
+    * `sum`, `sum of squares` (energy), `peak = max |s|`, sign-change count
+    * (zero crossings, `s == 0` counted non-negative), and `dim` per-lane
+    * sums (lane `j` accumulates samples `i ≡ j mod dim`) — the fixed-width
+    * vector downstream similarity ops consume. None for anything that is
+    * not a complete 16-bit PCM WAV.
+    */
   private[graft] def decodeWavPcm(b: Array[Byte], dim: Int): Option[Pcm] = {
     def u8(i: Int)  = b(i) & 0xFF
     def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
@@ -235,16 +235,6 @@ object Multimodal {
         col("__f.features").as("features"))
   }
 
-  /** Perceptual difference-hash (dHash) over a decoded signal's `lanes`
-    * per-lane sums: bit j (j = 0 .. lanes−2) is set iff
-    * `lane[j+1] > lane[j]` — the sign of the local gradient, the classic
-    * dHash construction applied to the exact-integer lane embedding
-    * [[decodeFeatures]] produces from REAL byte decode. Gradient signs are
-    * invariant to uniform gain/offset (a constant shift moves equal-count
-    * lanes equally), which is what makes it a NEAR-dup hash rather than an
-    * exact digest. Built from `lanes − 1` literal-index comparisons —
-    * whole-stage codegen, no HOF lambda, no per-row allocation.
-    */
   /** Corpus-derived dHash lane count — [[graft.ops.Similarity.annPlanesFor]]'s
     * occupancy-constant rule on the Hamming-banded lane embedding: the
     * smallest lane count whose per-band key width keeps expected bucket
@@ -258,15 +248,15 @@ object Multimodal {
     * whenever the corpus outgrows the default geometry;
     * [[audioBandOccupancy]] is the preflight that shows when.
     *
-    * Clamped to [32, 61]: the cap marks the single-word boundary (the
-    * hash packs into ONE long — 61 lanes → 60 bits), past which
-    * (~2.6·10^8 clips at maxHamming 2, targetBucket 250) the knee returns
-    * and a multi-word hash is the next step. The unclamped value is an
-    * exact bands·width product, so the [[bandRows]] degenerate-geometry
-    * guard never fires for it; the guard still backstops clamped
-    * extremes. Width is computed with INTEGER ceil-log2 (no floating
-    * log), so power-of-two corpus sizes land exactly and the SQL oracle
-    * can replay the same arithmetic without float-rounding divergence.
+    * Clamped to [32, 121]: the cap is the two-word hash limit
+    * ([[audioDHash]] — 121 lanes → 120 gradient bits), which at
+    * maxHamming 2, targetBucket 250 puts the geometry knee past ~10^19
+    * clips. The unclamped value is an exact bands·width product, so the
+    * [[bandRows]] degenerate-geometry guard never fires for it; the guard
+    * still backstops clamped extremes. Width is computed with INTEGER
+    * ceil-log2 (no floating log), so power-of-two corpus sizes land
+    * exactly and the SQL oracle can replay the same arithmetic without
+    * float-rounding divergence.
     *
     * Floor 32 — the proven default geometry — because unlike sign-LSH
     * (where buckets only gate CANDIDATES and the exact verify fixes
@@ -276,14 +266,7 @@ object Multimodal {
     * WIDENS from the default as the corpus grows — it never loosens a
     * small corpus below it.
     */
-  def dHashLanesFor(n: Long, maxHamming: Int = 2, targetBucket: Long = 250L): Int =
-    dHashLanesCapped(n, maxHamming, targetBucket, cap = 61)
-
-  /** The occupancy rule shared by [[dHashLanesFor]] and
-    * [[dHashLanesForWide]]; only the lane cap differs.
-    */
-  private def dHashLanesCapped(n: Long, maxHamming: Int, targetBucket: Long,
-      cap: Int): Int = {
+  def dHashLanesFor(n: Long, maxHamming: Int = 2, targetBucket: Long = 250L): Int = {
     require(n >= 0 && maxHamming >= 0 && targetBucket >= 1,
       "need n >= 0, maxHamming >= 0, positive targetBucket")
     val bands = maxHamming + 1
@@ -293,54 +276,75 @@ object Multimodal {
     // exact smallest w with 2^w >= x — the replayable form (ceil of a
     // float log2 can land on either side of an exact power of two)
     val width = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(x - 1))
-    math.min(cap, math.max(32, 1 + bands * width))
+    math.min(MaxAudioLanes, math.max(32, 1 + bands * width))
   }
 
-  def audioDHash(features: Column, lanes: Int): Column = {
-    require(lanes >= 2 && lanes <= 61, "lanes in [2, 61]")
-    (0 until lanes - 1).map { j =>
-      when(element_at(features, j + 2) > element_at(features, j + 1),
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _) // disjoint bits: + ≡ bitwise or
-  }
+  /** Bits per word of the audio hash: 60, so a band of up to 60 bits spans
+    * at most two adjacent words. */
+  private val AudioWordBits = 60
 
-  /** Per-band key of a Hamming-banded dHash: bits `[b·width, b·width+width)`
-    * of `h` (the last band takes the remainder). Shared by the pair join,
-    * its exactly-once filter, and the occupancy preflight so all three see
-    * the SAME buckets.
+  /** The audio hash's lane limit: two words, 120 gradient bits. */
+  private val MaxAudioLanes = 2 * AudioWordBits + 1
+
+  /** Perceptual difference-hash (dHash) over a decoded signal's `lanes`
+    * per-lane sums: bit j (j = 0 .. lanes−2) is set iff
+    * `lane[j+1] > lane[j]` — the sign of the local gradient, the classic
+    * dHash construction applied to the exact-integer lane embedding
+    * [[decodeFeatures]] produces from REAL byte decode. Gradient signs are
+    * invariant to uniform gain/offset (a constant shift moves equal-count
+    * lanes equally), which is what makes it a NEAR-dup hash rather than an
+    * exact digest.
+    *
+    * The hash is a list of 60-bit words: bit j lands in word j / 60 at
+    * position j % 60, so up to 61 lanes it is ONE long and 62..121 lanes
+    * add a second word. Built from `lanes − 1` literal-index comparisons —
+    * whole-stage codegen, no HOF lambda, no per-row allocation.
     */
-  private def bandKey(h: Column, b: Int, nBits: Int, width: Int): Column = {
-    val mask = (1L << math.min(width, nBits - b * width)) - 1
-    shiftright(h, b * width).bitwiseAND(lit(mask))
+  def audioDHash(features: Column, lanes: Int): Seq[Column] = {
+    require(lanes >= 2 && lanes <= MaxAudioLanes, s"lanes in [2, $MaxAudioLanes]")
+    (0 until lanes - 1).grouped(AudioWordBits).zipWithIndex.map { case (bits, w) =>
+      bits.map { j =>
+        when(element_at(features, j + 2) > element_at(features, j + 1),
+          lit(1L << (j - AudioWordBits * w))).otherwise(lit(0L))
+      }.reduce(_ + _) // disjoint bits: + ≡ bitwise or
+    }.toSeq
   }
 
-  /** [[bandKey]] over a TWO-WORD hash (60 bits per word): the band's bit
-    * range `[b·width, b·width+width)` addresses the CONCATENATED bit
-    * space, so a band that straddles the word boundary stitches its key
-    * from both words with plan-time-literal shifts/masks — the pigeonhole
-    * argument never looks inside the width. W > 2 words follows the same
-    * construction (each band spans at most two adjacent words as long as
-    * width ≤ 60, which `bandRowsWide`'s geometry guard implies).
+  /** Column names of an `nBits` hash in `wordBits`-bit words: `h`, then
+    * `h1`, `h2`, … — word 0 keeps the one-long name, so a one-word hash
+    * plans exactly as a plain `h` column.
     */
-  private def bandKeyWide(h0: Column, h1: Column, b: Int, nBits: Int,
+  private def hashWords(nBits: Int, wordBits: Int): Seq[String] =
+    (0 until (nBits + wordBits - 1) / wordBits).map(w => if (w == 0) "h" else s"h$w")
+
+  /** Per-band key of a Hamming-banded hash: bits `[b·width, b·width+width)`
+    * of the concatenated word space (the last band takes the remainder).
+    * A band that straddles a word boundary stitches its key from the two
+    * words with plan-time-literal shifts and masks; within one word it is
+    * one shift and one mask. Shared by the pair join, its exactly-once
+    * filter, and the occupancy preflight so all three see the SAME
+    * buckets.
+    */
+  private def bandKey(words: Seq[Column], wordBits: Int, b: Int, nBits: Int,
       width: Int): Column = {
     val lo = b * width
-    val w  = math.min(width, nBits - lo)
-    val off = lo % 60
-    val first = if (lo / 60 == 0) h0 else h1
-    val bits0 = math.min(w, 60 - off)
-    val k0 = shiftright(first, off).bitwiseAND(lit((1L << bits0) - 1))
-    if (bits0 >= w) k0
-    else k0.bitwiseOR(shiftleft(h1.bitwiseAND(lit((1L << (w - bits0)) - 1)), bits0))
+    val w = math.min(width, nBits - lo)
+    val off = lo % wordBits
+    val bits0 = math.min(w, wordBits - off)
+    val k0 = shiftright(words(lo / wordBits), off).bitwiseAND(lit((1L << bits0) - 1))
+    if (bits0 == w) k0
+    else k0.bitwiseOR(shiftleft(
+      words(lo / wordBits + 1).bitwiseAND(lit((1L << (w - bits0)) - 1)), bits0))
   }
 
-  /** The unpinned `(id, h, band, key)` band rows — shared by the
+  /** The unpinned `(id, h…, band, key)` band rows — shared by the
     * self-join index (pinned), the occupancy preflight, the persisted
     * index write, and the probe side of the incremental search. `hashed`
-    * is `(id, h)` with the decode already applied — the audio and image
+    * is `(id, h…)` with the decode already applied — the audio and image
     * front-ends differ only there.
     */
-  private def bandRows(hashed: DataFrame, nBits: Int, maxHamming: Int): DataFrame = {
+  private def bandRows(hashed: DataFrame, nBits: Int, wordBits: Int,
+      maxHamming: Int): DataFrame = {
     val bands = maxHamming + 1
     val width = (nBits + bands - 1) / bands
     // degenerate-geometry guard: with ceil-width bands, a (nBits, maxHamming)
@@ -353,45 +357,22 @@ object Multimodal {
       s"degenerate Hamming band geometry: nBits=$nBits, maxHamming=$maxHamming " +
         s"leaves band ${bands - 1} with no bits (ceil-width $width); pick " +
         "lanes/grid and maxHamming so all maxHamming+1 bands get at least one bit")
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"), bandKey(col("h"), b, nBits, width).as("key"))
-    }
-    hashed.select(col("id"), col("h"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("id"), col("h"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
-  /** [[bandRows]] over the two-word hash: `(id, h0, h1, band, key)` with
-    * keys from [[bandKeyWide]]. The geometry guard additionally pins
-    * `width ≤ 60` so no band ever spans MORE than two words — with
-    * `nBits ≤ 120` and `bands = maxHamming + 1 ≥ 2` that always holds, and
-    * the loud require documents the invariant the key stitcher relies on.
-    */
-  private def bandRowsWide(hashed: DataFrame, nBits: Int,
-      maxHamming: Int): DataFrame = {
-    val bands = maxHamming + 1
-    val width = (nBits + bands - 1) / bands
-    require((bands - 1) * width < nBits,
-      s"degenerate Hamming band geometry: nBits=$nBits, maxHamming=$maxHamming " +
-        s"leaves band ${bands - 1} with no bits (ceil-width $width)")
-    // Consequence of this guard (documented contract): the wide path
-    // effectively requires maxHamming >= 1 past 61 bits — maxHamming = 0
-    // means ONE band of nBits > 60 bits, which always trips the width
-    // bound. Exact-duplicate detection on a wide hash is an equality join
-    // on the (h0, h1) pair, not a banded search; use the exact-dedup lane.
-    require(width <= 60, s"band width $width exceeds one 60-bit word — " +
+    // a band key must fit one word so it spans at most two: past one
+    // audio word this means maxHamming >= 1 — exact duplicates on a
+    // multi-word hash are an equality dedup on the words, not a banded search
+    require(width <= wordBits, s"band width $width exceeds one $wordBits-bit word — " +
       "raise maxHamming (more, narrower bands) for a hash this wide; " +
-      "for maxHamming = 0 use an exact (h0, h1) equality dedup instead")
+      "for maxHamming = 0 use an exact equality dedup on the hash words instead")
+    val words = hashWords(nBits, wordBits).map(col)
     val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        bandKeyWide(col("h0"), col("h1"), b, nBits, width).as("key"))
+      struct(lit(b).as("band"), bandKey(words, wordBits, b, nBits, width).as("key"))
     }
-    hashed.select(col("id"), col("h0"), col("h1"),
-      explode(array(bandStructs: _*)).as("bk"))
-      .select(col("id"), col("h0"), col("h1"), col("bk.band"), col("bk.key"))
+    hashed.select(col("id") +: words :+ explode(array(bandStructs: _*)).as("bk"): _*)
+      .select(col("id") +: words :+ col("bk.band").as("band") :+ col("bk.key").as("key"): _*)
   }
 
   private def bandedIndex(hashed: DataFrame,
-      nBits: Int, maxHamming: Int): DataFrame =
+      nBits: Int, wordBits: Int, maxHamming: Int): DataFrame =
     // Pinned UNPARTITIONED (unlike the text LSH index, which pre-shuffles
     // on (band, hv)): Hamming band keys are ≤ ~11 bits, so a pinned
     // (band, key) layout is skew-prone and — being a checkpoint, not an
@@ -405,43 +386,18 @@ object Multimodal {
     // checkpoint read as pure overhead (the 2 s it "cost" was the pushed
     // decode itself). Fenced, the pin is a cheap wide job and both
     // self-join sides read its blocks (decode exactly once).
-    Checkpoints.pin(bandRows(hashed, nBits, maxHamming), eager = false)
+    Checkpoints.pin(bandRows(hashed, nBits, wordBits, maxHamming), eager = false)
 
-  /** `(id, h)` decoded-audio dHash rows — the shared head of
-    * [[audioNearDupPairs]] and [[audioBandOccupancy]].
+  /** `(id, h…)` decoded-audio dHash rows — the shared head of
+    * [[audioNearDupPairs]], [[audioBandOccupancy]] and the audio index.
     */
   private def audioHashes(df: DataFrame, idCol: String, payloadCol: String,
-      lanes: Int): DataFrame =
+      lanes: Int): DataFrame = {
+    val words = audioDHash(col("features"), lanes)
+      .zip(hashWords(lanes - 1, AudioWordBits)).map { case (w, name) => w.as(name) }
     decodeFeatures(df, idCol, payloadCol, lanes)
       .filter(fence(col("features").isNotNull))
-      .select(col(idCol).as("id"), audioDHash(col("features"), lanes).as("h"))
-
-  /** One 60-bit word of the WIDE dHash: gradient-sign bit `b`
-    * (`lane[b+1] > lane[b]`, the [[audioDHash]] definition over the
-    * concatenated bit space) lands in word `b / 60` at in-word position
-    * `b % 60`. Disjoint literal bits summed — codegen, no HOF.
-    */
-  private def dHashWideWord(features: Column, lanes: Int, word: Int): Column = {
-    val bits = (60 * word) until math.min(lanes - 1, 60 * word + 60)
-    bits.map { b =>
-      when(element_at(features, b + 2) > element_at(features, b + 1),
-        lit(1L << (b - 60 * word))).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** `(id, h0, h1)` decoded-audio WIDE dHash rows — [[audioHashes]] past
-    * the single-long boundary (62..121 lanes → 61..120 gradient bits in
-    * two 60-bit words).
-    */
-  private[graft] def audioHashesWide(df: DataFrame, idCol: String,
-      payloadCol: String, lanes: Int): DataFrame = {
-    require(lanes >= 62 && lanes <= 121,
-      "wide dHash covers lanes in [62, 121]; use audioNearDupPairs below 62")
-    decodeFeatures(df, idCol, payloadCol, lanes)
-      .filter(fence(col("features").isNotNull))
-      .select(col(idCol).as("id"),
-        dHashWideWord(col("features"), lanes, 0).as("h0"),
-        dHashWideWord(col("features"), lanes, 1).as("h1"))
+      .select(col(idCol).as("id") +: words: _*)
   }
 
   /** Occupancy histogram over a banded index — shared tail of the
@@ -455,134 +411,59 @@ object Multimodal {
         (col("occ") * (col("occ") - 1) / 2 * col("n_buckets")).cast("long").as("cand_pairs"))
       .orderBy(col("occ"))
 
-  /** Hamming-banded near-dup pairs over prepared `(id, h)` hashes — the
+  /** Hamming-banded near-dup pairs over prepared `(id, h…)` hashes — the
     * shared engine behind [[audioNearDupPairs]] and [[imageNearDupPairs]];
     * see [[audioNearDupPairs]] for the full banding / exactly-once /
-    * maxBucket contract.
+    * maxBucket contract. Every word rides the index rows; the verify is
+    * the sum of the per-word popcounts.
     */
-  private def hammingNearDupPairs(hashed: DataFrame, nBits: Int,
+  private def hammingNearDupPairs(hashed: DataFrame, nBits: Int, wordBits: Int,
       maxHamming: Int, maxBucket: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < nBits, "maxHamming in [0, nBits-1]")
     require(maxBucket >= 1, "maxBucket must be positive")
     val bands = maxHamming + 1
     val width = (nBits + bands - 1) / bands
-    val banded = bandedIndex(hashed, nBits, maxHamming)
+    val words = hashWords(nBits, wordBits)
+    // word `h…` of side `from` ("x.", "rep.", …) renamed `ha…` / `hb…`
+    def sideWords(from: String, to: String): Seq[Column] =
+      words.map(n => col(from + n).as(to + n.drop(1)))
+    val banded = bandedIndex(hashed, nBits, wordBits, maxHamming)
     def pairs(idx: DataFrame, extra: Column): DataFrame = idx.as("x")
       .join(idx.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.id") < col("y.id"))
       .filter(extra)
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        col("x.h").as("ha"), col("y.h").as("hb"))
+      .select(Seq(col("x.id").as("a"), col("y.id").as("b")) ++
+        sideWords("x.", "ha") ++ sideWords("y.", "hb"): _*)
     def verify(cand: DataFrame): DataFrame = cand
       .select(col("a"), col("b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
+        words.map { n =>
+          bit_count(col("ha" + n.drop(1)).bitwiseXOR(col("hb" + n.drop(1))))
+        }.reduce(_ + _).as("hamming"))
       .filter(col("hamming") <= maxHamming)
     if (maxBucket == Int.MaxValue) {
       // first-shared-band: no band before this one may have equal keys
       val noEarlierShared = (0 until bands).map { bp =>
         when(lit(bp) < col("x.band"),
-          bandKey(col("x.h"), bp, nBits, width) =!=
-            bandKey(col("y.h"), bp, nBits, width))
+          bandKey(words.map(n => col("x." + n)), wordBits, bp, nBits, width) =!=
+            bandKey(words.map(n => col("y." + n)), wordBits, bp, nBits, width))
           .otherwise(lit(true))
       }.reduce(_ && _)
       verify(pairs(banded, noEarlierShared))
     } else {
-      // min(struct(id, h)) orders by id first — the representative and its
-      // hash in one partial-aggregated pass on the co-partitioned index
+      // min(struct(id, h…)) orders by id first — the representative and
+      // its hash in one partial-aggregated pass on the co-partitioned index
       val hot = banded.groupBy(col("band"), col("key"))
-        .agg(count(lit(1)).as("occ"), min(struct(col("id"), col("h"))).as("rep"))
+        .agg(count(lit(1)).as("occ"), min(struct(col("id") +: words.map(col): _*)).as("rep"))
         .filter(col("occ") > maxBucket)
       val cold = banded.join(hot.select(col("band"), col("key")),
         Seq("band", "key"), "left_anti")
       val candHot = banded.join(hot, Seq("band", "key"))
         .filter(col("id") =!= col("rep.id"))
-        .select(col("rep.id").as("a"), col("id").as("b"),
-          col("rep.h").as("ha"), col("h").as("hb"))
+        .select(Seq(col("rep.id").as("a"), col("id").as("b")) ++
+          sideWords("rep.", "ha") ++ sideWords("", "hb"): _*)
       verify(pairs(cold, lit(true)).unionByName(candHot).distinct())
     }
-  }
-
-  /** [[hammingNearDupPairs]] over the TWO-WORD hash — the same banded
-    * construction verbatim with `(h0, h1)` riding where `h` rode: per-band
-    * equi-join on [[bandKeyWide]] keys, exactly-once first-shared-band
-    * emission (earlier bands' keys provably differ, checked map-side),
-    * `maxBucket` star pairing for floods, and the exact verify
-    * `bit_count(a0⊕b0) + bit_count(a1⊕b1) ≤ maxHamming` on the join
-    * output. Pigeonhole recall stays 1.0: the bands partition the
-    * concatenated bit space, so ≤ maxHamming differing bits still leave at
-    * least one band exactly equal — nothing in the argument sees the word
-    * boundary.
-    */
-  private def hammingNearDupPairsWide(hashed: DataFrame, nBits: Int,
-      maxHamming: Int, maxBucket: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < nBits, "maxHamming in [0, nBits-1]")
-    require(maxBucket >= 1, "maxBucket must be positive")
-    val bands = maxHamming + 1
-    val width = (nBits + bands - 1) / bands
-    val banded = Checkpoints.pin(bandRowsWide(hashed, nBits, maxHamming), eager = false)
-    def pairs(idx: DataFrame, extra: Column): DataFrame = idx.as("x")
-      .join(idx.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.id") < col("y.id"))
-      .filter(extra)
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        col("x.h0").as("ha0"), col("x.h1").as("ha1"),
-        col("y.h0").as("hb0"), col("y.h1").as("hb1"))
-    def verify(cand: DataFrame): DataFrame = cand
-      .select(col("a"), col("b"),
-        (bit_count(col("ha0").bitwiseXOR(col("hb0"))) +
-          bit_count(col("ha1").bitwiseXOR(col("hb1")))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    if (maxBucket == Int.MaxValue) {
-      val noEarlierShared = (0 until bands).map { bp =>
-        when(lit(bp) < col("x.band"),
-          bandKeyWide(col("x.h0"), col("x.h1"), bp, nBits, width) =!=
-            bandKeyWide(col("y.h0"), col("y.h1"), bp, nBits, width))
-          .otherwise(lit(true))
-      }.reduce(_ && _)
-      verify(pairs(banded, noEarlierShared))
-    } else {
-      val hot = banded.groupBy(col("band"), col("key"))
-        .agg(count(lit(1)).as("occ"),
-          min(struct(col("id"), col("h0"), col("h1"))).as("rep"))
-        .filter(col("occ") > maxBucket)
-      val cold = banded.join(hot.select(col("band"), col("key")),
-        Seq("band", "key"), "left_anti")
-      val candHot = banded.join(hot, Seq("band", "key"))
-        .filter(col("id") =!= col("rep.id"))
-        .select(col("rep.id").as("a"), col("id").as("b"),
-          col("rep.h0").as("ha0"), col("rep.h1").as("ha1"),
-          col("h0").as("hb0"), col("h1").as("hb1"))
-      verify(pairs(cold, lit(true)).unionByName(candHot).distinct())
-    }
-  }
-
-  /** [[dHashLanesFor]] PAST the single-long boundary: the same exact
-    * integer occupancy rule with the cap lifted to the two-word limit
-    * (121 lanes → 120 gradient bits in two 60-bit words). Below 62 the
-    * value coincides with [[dHashLanesFor]]'s and the single-word
-    * operator is the right consumer; above it, route pairs through
-    * [[audioNearDupPairsWide]]. At `maxHamming = 2`, `targetBucket = 250`
-    * the widened cap moves the geometry knee from ~2.6·10⁸ clips out past
-    * ~10¹⁹ — effectively unreachable; W > 2 words follows the identical
-    * construction if it ever isn't.
-    */
-  def dHashLanesForWide(n: Long, maxHamming: Int = 2,
-      targetBucket: Long = 250L): Int =
-    dHashLanesCapped(n, maxHamming, targetBucket, cap = 121)
-
-  /** [[audioNearDupPairs]] past the 61-lane single-long boundary: the
-    * WIDE (two-word) hash head feeding the same Hamming-banded pipeline —
-    * the implementation of SCALING.md's multi-word design note. Output:
-    * `(a, b, hamming)` with `a < b`, one row per qualifying pair, exactly
-    * the single-word operator's contract at up to 120 gradient bits.
-    */
-  def audioNearDupPairsWide(df: DataFrame, idCol: String, payloadCol: String,
-      lanes: Int, maxHamming: Int, maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < lanes - 1, "maxHamming in [0, lanes-2]")
-    hammingNearDupPairsWide(audioHashesWide(df, idCol, payloadCol, lanes),
-      lanes - 1, maxHamming, maxBucket)
   }
 
   /** Hamming-band bucket occupancy preflight — the measurement that decides
@@ -602,7 +483,7 @@ object Multimodal {
     // unpinned bandRows: the occupancy tail consumes the index exactly
     // once, so a checkpoint would be a pure extra materialization
     bandOccupancy(bandRows(
-      audioHashes(df, idCol, payloadCol, lanes), lanes - 1, maxHamming))
+      audioHashes(df, idCol, payloadCol, lanes), lanes - 1, AudioWordBits, maxHamming))
   }
 
   /** [[audioBandOccupancy]] on the RASTER lane — the preflight that
@@ -612,9 +493,10 @@ object Multimodal {
     */
   def imageBandOccupancy(df: DataFrame, idCol: String, payloadCol: String,
       gw: Int = 8, gh: Int = 8, maxHamming: Int = 2): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < gh * (gw - 1), "maxHamming in [0, bits-1]")
+    val bits = gh * (gw - 1)
+    require(maxHamming >= 0 && maxHamming < bits, "maxHamming in [0, bits-1]")
     bandOccupancy(bandRows(
-      imageHashes(df, idCol, payloadCol, gw, gh), gh * (gw - 1), maxHamming))
+      imageHashes(df, idCol, payloadCol, gw, gh), bits, bits, maxHamming))
   }
 
   /** Multimodal near-duplicate pairs: decode each payload's PCM for real
@@ -628,6 +510,9 @@ object Multimodal {
     * ONE band matches exactly — candidate recall is 1.0 by construction
     * (not probabilistic), and the exact `bit_count(a ^ b) <= maxHamming`
     * verify on candidates reproduces the all-pairs answer bit-for-bit.
+    * Nothing in the argument sees the word boundary: past 61 lanes the
+    * bands partition the two words' concatenated bits ([[audioDHash]]) and
+    * the verify sums the per-word popcounts, up to 121 lanes.
     * That equivalence is what lets the DuckDB oracle replay the operator
     * as a plain quadratic filter at test scale while the engine runs the
     * banded plan at any scale: per-band equi-join on ~(lanes−1)/(maxH+1)
@@ -668,7 +553,7 @@ object Multimodal {
       maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxHamming >= 0 && maxHamming < lanes - 1, "maxHamming in [0, lanes-2]")
     hammingNearDupPairs(audioHashes(df, idCol, payloadCol, lanes),
-      lanes - 1, maxHamming, maxBucket)
+      lanes - 1, AudioWordBits, maxHamming, maxBucket)
   }
 
   /** Per-cell luminance sums of a decoded raster — REAL pixel decode for
@@ -703,9 +588,10 @@ object Multimodal {
   }
 
   /** Persist a corpus's Hamming dHash index as ONE bucketed table —
-    * `(id, h, band, key)` bucketed by `(band, key)` — the multimodal
+    * `(id, h, band, key)` bucketed by `(band, key)`, plus an `h1` word
+    * column past 61 lanes — the multimodal
     * counterpart of [[graft.ops.Text.writeMinhashIndex]], and simpler:
-    * the 64-bit hash IS the verify payload, so there is no second
+    * the hash IS the verify payload, so there is no second
     * (shingle-set) table and the search needs no verify join-back. After
     * this one-time shuffle, every ingest increment deduplicates against
     * the corpus with no corpus re-decode and no corpus-side exchange.
@@ -770,7 +656,8 @@ object Multimodal {
     * so a caller default that drifts from the persisted geometry would
     * produce hashes from a DIFFERENT space: same schema, silently-empty
     * joins, zero recall with no error. The sidecar makes the geometry a
-    * property of the index, not of every call site's memory.
+    * property of the index, not of every call site's memory. The number
+    * of hash words follows from `n_bits` and the head ([[wordBits]]).
     */
   final case class HashIndexGeometry(head: String, nBits: Int, maxHamming: Int,
       lanes: Option[Int], gw: Option[Int], gh: Option[Int],
@@ -798,6 +685,11 @@ object Multimodal {
       }
     }
   }
+
+  /** Bits per hash word of an index's head: the audio hash is 60-bit
+    * words, the image hash one word of all its bits. */
+  private def wordBits(g: HashIndexGeometry): Int =
+    if (g.head == "audio") AudioWordBits else g.nBits
 
   private def writeHashIndexMeta(spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String, g: HashIndexGeometry): Unit = {
@@ -841,7 +733,7 @@ object Multimodal {
           s"$stored vs incoming $geom — probe/append with " +
           "hashIndexGeometry(...) or rebuild with mode=overwrite")
     }
-    Storage.writeBucketed(bandRows(hashed, geom.nBits, geom.maxHamming),
+    Storage.writeBucketed(bandRows(hashed, geom.nBits, wordBits(geom), geom.maxHamming),
       s"${tablePrefix}_idx", Seq("band", "key"), buckets, mode)
     // appends to a pre-sidecar index adopt the (validated-compatible)
     // incoming geometry; the stored row otherwise stays authoritative
@@ -855,17 +747,18 @@ object Multimodal {
     * fresh; candidates come from an equi-join on the bucketed
     * `(band, key)` index — AQE broadcasts the batch side, the corpus
     * never shuffles — and the Hamming verify runs MAP-SIDE on the join
-    * output (both hashes ride the rows). Pigeonhole recall 1.0: a stored
-    * clip within `maxHamming` bits always shares a band, so the drop set
-    * is exactly the quadratic filter's (the oracle replays it as one).
+    * output (both hashes ride the rows, every word of each). Pigeonhole
+    * recall 1.0: a stored clip within `maxHamming` bits always shares a
+    * band, so the drop set is exactly the quadratic filter's (the oracle
+    * replays it as one).
     * Pending deletes are anti-joined off the index side (tombstones are
     * small by contract — [[deleteFromDHashIndex]]).
     */
   def audioDedupAgainstIndex(batch: DataFrame, idCol: String, payloadCol: String,
       lanes: Int, maxHamming: Int, tablePrefix: String): DataFrame = {
     require(maxHamming >= 0 && maxHamming < lanes - 1, "maxHamming in [0, lanes-2]")
-    dedupAgainstHashIndex(batch, idCol,
-      audioHashes(batch, idCol, payloadCol, lanes), lanes - 1, maxHamming, tablePrefix)
+    dedupAgainstHashIndex(batch, idCol, audioHashes(batch, idCol, payloadCol, lanes),
+      lanes - 1, AudioWordBits, maxHamming, tablePrefix)
   }
 
   /** [[audioDedupAgainstIndex]] on the RASTER lane: drop batch images with
@@ -878,10 +771,10 @@ object Multimodal {
     */
   def imageDedupAgainstIndex(batch: DataFrame, idCol: String, payloadCol: String,
       gw: Int = 8, gh: Int = 8, maxHamming: Int = 2, tablePrefix: String): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < gh * (gw - 1), "maxHamming in [0, bits-1]")
-    dedupAgainstHashIndex(batch, idCol,
-      imageHashes(batch, idCol, payloadCol, gw, gh), gh * (gw - 1), maxHamming,
-      tablePrefix)
+    val bits = gh * (gw - 1)
+    require(maxHamming >= 0 && maxHamming < bits, "maxHamming in [0, bits-1]")
+    dedupAgainstHashIndex(batch, idCol, imageHashes(batch, idCol, payloadCol, gw, gh),
+      bits, bits, maxHamming, tablePrefix)
   }
 
   /** [[audioDedupAgainstIndex]] probing with the PERSISTED geometry: lane
@@ -909,20 +802,24 @@ object Multimodal {
       g.gw.getOrElse(8), g.gh.getOrElse(8), g.maxHamming, tablePrefix)
   }
 
-  /** Shared incremental-dedup tail over the batch's prepared `(id, h)`
+  /** Shared incremental-dedup tail over the batch's prepared `(id, h…)`
     * hashes — see [[audioDedupAgainstIndex]] for the full contract.
     */
   private def dedupAgainstHashIndex(batch: DataFrame, idCol: String,
-      batchHashes: DataFrame, nBits: Int, maxHamming: Int,
+      batchHashes: DataFrame, nBits: Int, wordBits: Int, maxHamming: Int,
       tablePrefix: String): DataFrame = {
     val spark = batch.sparkSession
-    val probe = bandRows(batchHashes, nBits, maxHamming)
-      .select(col("id").as("bid"), col("h").as("bh"), col("band"), col("key"))
+    val words = hashWords(nBits, wordBits)
+    // the batch's words ride as `bh…` next to the index's `h…`
+    val probe = bandRows(batchHashes, nBits, wordBits, maxHamming)
+      .select(Seq(col("id").as("bid")) ++ words.map(n => col(n).as("b" + n)) ++
+        Seq(col("band"), col("key")): _*)
     val idx0 = spark.table(s"${tablePrefix}_idx")
     val idx = Storage.tombstonesOf(spark, s"${tablePrefix}_del")
       .fold(idx0)(del => idx0.join(del, Seq("id"), "left_anti"))
     val dup = probe.join(idx, Seq("band", "key"))
-      .filter(bit_count(col("bh").bitwiseXOR(col("h"))) <= maxHamming)
+      .filter(words.map(n => bit_count(col("b" + n).bitwiseXOR(col(n)))).reduce(_ + _) <=
+        maxHamming)
       .select(col("bid")).distinct()
     batch.join(dup, batch(idCol) === dup("bid"), "left_anti")
   }
@@ -937,15 +834,16 @@ object Multimodal {
 
   /** Fold accumulated tombstones into the physical index (bucketing
     * preserved) and reset them — the maintenance-window rewrite, same
-    * contract as [[graft.ops.Text.compactMinhashIndex]].
+    * contract as [[graft.ops.Text.compactMinhashIndex]]. The rewrite keeps
+    * the index's own columns, every hash word included.
     */
   def compactDHashIndex(spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String, buckets: Int): Unit =
     Storage.tombstonesOf(spark, s"${tablePrefix}_del").foreach { del =>
       val keep = Checkpoints.pin(
         spark.table(s"${tablePrefix}_idx").join(del, Seq("id"), "left_anti"))
-      Storage.writeBucketed(keep.select(col("id"), col("h"), col("band"), col("key")),
-        s"${tablePrefix}_idx", Seq("band", "key"), buckets, "overwrite")
+      Storage.writeBucketed(keep, s"${tablePrefix}_idx", Seq("band", "key"), buckets,
+        "overwrite")
       Storage.clearTombstones(spark, s"${tablePrefix}_del")
       Checkpoints.release(keep)
     }
@@ -963,9 +861,11 @@ object Multimodal {
     */
   def imageNearDupPairs(df: DataFrame, idCol: String, payloadCol: String,
       gw: Int = 8, gh: Int = 8, maxHamming: Int = 2,
-      maxBucket: Int = Int.MaxValue): DataFrame =
+      maxBucket: Int = Int.MaxValue): DataFrame = {
+    val bits = gh * (gw - 1)
     hammingNearDupPairs(imageHashes(df, idCol, payloadCol, gw, gh),
-      gh * (gw - 1), maxHamming, maxBucket)
+      bits, bits, maxHamming, maxBucket)
+  }
 
   /** `(id, h)` decoded-raster dHash rows — the image twin of
     * [[audioHashes]], shared by [[imageNearDupPairs]],

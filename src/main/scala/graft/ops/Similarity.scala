@@ -327,16 +327,6 @@ object Similarity {
       .select(col("id"), col("v"), col("cell"), (col("p") + 1).cast("int").as("rn"))
   }
 
-  /** T5 scale path #2 — IVF top-k: every vector is STORED in its home cell
-    * (rn = 1) and SEARCHES its `nProbe` nearest cells — the standard IVF
-    * recall knob. Complements [[annTopK]] (sign-LSH buckets); same join
-    * shape — an equi-join on a small cell id instead of a cross join.
-    * Candidates are naturally distinct (each neighbour lives in exactly one
-    * cell), so no dedup step is needed. On isotropic (structureless)
-    * vectors recall tracks the probed fraction nProbe/nCells — no partition
-    * scheme can beat that without structure to exploit; on real clustered
-    * embeddings a small nProbe recovers high recall.
-    */
   /** Compute-balanced IVF cell count for a corpus of `n` vectors:
     * assignment scans all centroids per vector (cost n·C) while search
     * pulls each probe's nProbe cells (cost n·(n/C)·nProbe), so a FIXED C
@@ -352,6 +342,16 @@ object Similarity {
     math.max(8, math.round(math.sqrt(n.toDouble * nProbe)).toInt)
   }
 
+  /** T5 scale path #2 — IVF top-k: every vector is STORED in its home cell
+    * (rn = 1) and SEARCHES its `nProbe` nearest cells — the standard IVF
+    * recall knob. Complements [[annTopK]] (sign-LSH buckets); same join
+    * shape — an equi-join on a small cell id instead of a cross join.
+    * Candidates are naturally distinct (each neighbour lives in exactly one
+    * cell), so no dedup step is needed. On isotropic (structureless)
+    * vectors recall tracks the probed fraction nProbe/nCells — no partition
+    * scheme can beat that without structure to exploit; on real clustered
+    * embeddings a small nProbe recovers high recall.
+    */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, nCells: Int, k: Int,
       nProbe: Int = 1, seedByHash: Boolean = false): DataFrame = {
     val assigned = ivfAssignN(df, idCol, vecCol, nCells, nProbe, seedByHash)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Aggregation surface (SURVEY §2.7–2.8). All stock Spark hash aggregates —
   * partial (map-side) + final pairs come free, which is the 100 TB answer:
@@ -224,26 +225,25 @@ object Summaries {
     */
   def quantileBins(df: DataFrame, specs: Seq[(String, Int, String)]): DataFrame = {
     require(specs.nonEmpty && specs.forall(_._2 >= 2), "need specs with >= 2 bins")
-    val cuts = exactQuantileArrays(df, specs.map { case (valCol, nBins, binName) =>
-      (valCol, (1 until nBins).map(_.toDouble / nBins), s"__cuts_$binName")
+    val names = specs.map(s => s"__cuts_${s._3}")
+    val cuts = exactQuantileArrays(df, specs.zip(names).map { case ((valCol, nBins, _), name) =>
+      (valCol, (1 until nBins).map(_.toDouble / nBins), name)
     })
-    specs.foldLeft(df.crossJoin(broadcast(cuts))) { case (acc, (valCol, nBins, binName)) =>
-      // "count of cut points <= value", unrolled to nBins-1 codegen'd
-      // comparisons against the broadcast cut array. The obvious HOF form —
+    // ascending under Spark's double ordering, for the binary search: the
+    // interpolation is not guaranteed monotone in floating point, and a
+    // count of the cuts <= v does not depend on their order — one sort of
+    // one row
+    val sortedCuts = cuts.select(names.map(n => sort_array(col(n)).as(n)): _*)
+    specs.foldLeft(df.crossJoin(broadcast(sortedCuts))) { case (acc, (valCol, _, binName)) =>
+      // "count of cut points <= value" as one codegen'd binary search
+      // (graft.expr.CutRank) against the broadcast cut array: constant
+      // generated code at any bin count. The HOF form —
       // size(filter(cuts, c <= v)) — evaluates its lambda in interpreter
       // mode on EVERY row (higher-order functions have no doGenCode), which
-      // measured as the dominant cost of the whole binning pass at sf0.1;
-      // element_at with a literal index stays inside whole-stage codegen.
+      // measured as the dominant cost of the whole binning pass at sf0.1.
       val cutsCol = col(s"__cuts_$binName")
-      // BALANCED tree reduction, not reduceLeft: a left-nested chain makes
-      // the Column tree nBins deep, and the node-to-expression converter
-      // recurses per level — ~1000 bins (curve layouts at bits >= 10)
-      // overflowed the stack. Balanced depth is log2(nBins).
-      def sumTree(cs: IndexedSeq[Column]): Column =
-        if (cs.size == 1) cs.head
-        else sumTree(cs.take(cs.size / 2)) + sumTree(cs.drop(cs.size / 2))
-      val rank = sumTree((1 until nBins)
-        .map(i => when(element_at(cutsCol, i) <= col(valCol), 1).otherwise(0)))
+      val rank = ColumnBridge.column(graft.expr.CutRank(ColumnBridge.expression(cutsCol),
+        ColumnBridge.expression(col(valCol).cast("double"))))
       acc.withColumn(binName,
         // NULL value → NULL bin (a count over comparisons would yield bin 0);
         // NULL cut array (all-NULL input column) → NULL bin, as size(NULL)
@@ -251,7 +251,7 @@ object Summaries {
         when(col(valCol).isNull || cutsCol.isNull, lit(null))
           .otherwise(rank)
           .cast("int"))
-    }.drop(specs.map(s => s"__cuts_${s._3}"): _*)
+    }.drop(names: _*)
   }
 
   /** Exact interpolated quantiles (`percentile`/`quantile_cont` semantics:

@@ -345,28 +345,6 @@ object Text {
         coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"))
   }
 
-  /** Substring-level duplication census: for each document, how much of it
-    * is covered by token n-gram windows that occur MORE THAN ONCE in the
-    * corpus (any document, including elsewhere in the same one) — the
-    * exact-substring counterpart of the MinHash whole-document families,
-    * and the measurement step of suffix-style training-data dedup: repeated
-    * spans (boilerplate, licenses, templated text) are what substring
-    * dedup clips, and `coverage` is the per-document clip fraction.
-    *
-    * Scale shape: one window row per token position, but what SHUFFLES is
-    * `(doc_id, pos, md5(gram))` — a fixed ~50 B regardless of n, never the
-    * gram text. Occurrence counting is a count-over-window on the hash
-    * (one exchange, no join-back), the covered-position union is an
-    * explode+distinct ON THE DUPLICATED SUBSET ONLY (n× rows on typically
-    * a few % of positions), and the final per-doc count is a partial
-    * aggregate. The md5 key is the oracle-replayable choice ([[hash60]]
-    * note); its 128 bits make cross-gram collisions negligible at any
-    * corpus size.
-    *
-    * @return (doc_id, n_tokens, covered, coverage) — `covered` counts
-    *         distinct token positions inside at least one duplicated
-    *         window; `coverage` = covered / n_tokens rounded to 1e-4.
-    */
   /** Entity-resolution scoring over a NAME VOCABULARY: the corpus first
     * collapses to (distinct name, row count) — scoring runs on vocabulary
     * entries, not rows, the same corpus→vocab reduction BPE training uses —
@@ -417,6 +395,28 @@ object Text {
     (toks, wins)
   }
 
+  /** Substring-level duplication census: for each document, how much of it
+    * is covered by token n-gram windows that occur MORE THAN ONCE in the
+    * corpus (any document, including elsewhere in the same one) — the
+    * exact-substring counterpart of the MinHash whole-document families,
+    * and the measurement step of suffix-style training-data dedup: repeated
+    * spans (boilerplate, licenses, templated text) are what substring
+    * dedup clips, and `coverage` is the per-document clip fraction.
+    *
+    * Scale shape: one window row per token position, but what SHUFFLES is
+    * `(doc_id, pos, md5(gram))` — a fixed ~50 B regardless of n, never the
+    * gram text. Occurrence counting is a count-over-window on the hash
+    * (one exchange, no join-back), the covered-position union is an
+    * explode+distinct ON THE DUPLICATED SUBSET ONLY (n× rows on typically
+    * a few % of positions), and the final per-doc count is a partial
+    * aggregate. The md5 key is the oracle-replayable choice ([[hash60]]
+    * note); its 128 bits make cross-gram collisions negligible at any
+    * corpus size.
+    *
+    * @return (doc_id, n_tokens, covered, coverage) — `covered` counts
+    *         distinct token positions inside at least one duplicated
+    *         window; `coverage` = covered / n_tokens rounded to 1e-4.
+    */
   def duplicatedNgramCoverage(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     val (toks, wins) = ngramWindows(df, idCol, textCol, n)
@@ -633,39 +633,6 @@ object Text {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
 
-  /** D3/T6/J7 — near-duplicate pairs by MinHash + LSH, then exact verify.
-    *
-    * Scale shape (the 100 TB story): signatures are k longs per doc computed
-    * in the scan stage; the LSH join is a plain equi-join on (band, value) —
-    * k rows of (id, band, long) per doc shuffle, NEVER the text — and only
-    * the candidate pairs (a vanishing fraction of n²) pull their shingle sets
-    * through the verify join. Nothing is all-pairs.
-    *
-    * Bands are r=1 (one signature row per band): candidate iff ANY of the k
-    * minhashes collide, giving recall 1-(1-j)^k — ~1 for j≥0.5, k=16.
-    *
-    * Hot-bucket bound (`maxBucket`): a cluster of d near-identical documents
-    * collides in EVERY band, so the unguarded band self-join emits O(d²)
-    * candidate rows into one shuffle partition — at corpus scale a
-    * boilerplate flood (d ~ millions) melts those tasks. Buckets whose
-    * occupancy exceeds `maxBucket` switch from all-pairs to STAR pairing:
-    * every member pairs with the bucket's minimum id only — O(d) candidate
-    * rows, and a clone flood still resolves to ONE connected component in
-    * survivor resolution (all star pairs verify at Jaccard 1.0). Recall
-    * contract: a qualifying pair is missed only if EVERY band it collides
-    * in is hot AND neither side is that bucket's representative; duplicated
-    * documents always keep a verified path to their representative, so
-    * dedup OUTCOMES (which docs have a partner, which component they join)
-    * are preserved — q174 quantifies this on a 1000-clone flood. Default
-    * OFF (`Int.MaxValue`), matching [[graft.ops.Similarity.annTopK]]: the
-    * cap changes which pairs are emitted, so enabling it is an explicit
-    * corpus-scale decision — and the unbounded default is exactly what the
-    * SQL oracles model. With the cap off the occupancy pass is skipped
-    * entirely (the historical single self-join plan).
-    *
-    * The banded index is pinned ([[Checkpoints]]): it feeds the occupancy
-    * count, both self-join sides, and the star branch.
-    */
   /** LSH band-bucket occupancy preflight — the report that tells an
     * operator whether [[minhashNearDupPairs]] needs its `maxBucket` bound
     * BEFORE the pair join runs at a new corpus scale. `maxBucket` is
@@ -701,6 +668,39 @@ object Text {
       .orderBy(col("occ"))
   }
 
+  /** D3/T6/J7 — near-duplicate pairs by MinHash + LSH, then exact verify.
+    *
+    * Scale shape (the 100 TB story): signatures are k longs per doc computed
+    * in the scan stage; the LSH join is a plain equi-join on (band, value) —
+    * k rows of (id, band, long) per doc shuffle, NEVER the text — and only
+    * the candidate pairs (a vanishing fraction of n²) pull their shingle sets
+    * through the verify join. Nothing is all-pairs.
+    *
+    * Bands are r=1 (one signature row per band): candidate iff ANY of the k
+    * minhashes collide, giving recall 1-(1-j)^k — ~1 for j≥0.5, k=16.
+    *
+    * Hot-bucket bound (`maxBucket`): a cluster of d near-identical documents
+    * collides in EVERY band, so the unguarded band self-join emits O(d²)
+    * candidate rows into one shuffle partition — at corpus scale a
+    * boilerplate flood (d ~ millions) melts those tasks. Buckets whose
+    * occupancy exceeds `maxBucket` switch from all-pairs to STAR pairing:
+    * every member pairs with the bucket's minimum id only — O(d) candidate
+    * rows, and a clone flood still resolves to ONE connected component in
+    * survivor resolution (all star pairs verify at Jaccard 1.0). Recall
+    * contract: a qualifying pair is missed only if EVERY band it collides
+    * in is hot AND neither side is that bucket's representative; duplicated
+    * documents always keep a verified path to their representative, so
+    * dedup OUTCOMES (which docs have a partner, which component they join)
+    * are preserved — q174 quantifies this on a 1000-clone flood. Default
+    * OFF (`Int.MaxValue`), matching [[graft.ops.Similarity.annTopK]]: the
+    * cap changes which pairs are emitted, so enabling it is an explicit
+    * corpus-scale decision — and the unbounded default is exactly what the
+    * SQL oracles model. With the cap off the occupancy pass is skipped
+    * entirely (the historical single self-join plan).
+    *
+    * The banded index is pinned ([[Checkpoints]]): it feeds the occupancy
+    * count, both self-join sides, and the star branch.
+    */
   def minhashNearDupPairs(
       docs: DataFrame,
       idCol: String,
@@ -1427,22 +1427,6 @@ object Text {
         Summaries.r4(col("cum_cnt").cast("double") / col("__total")).as("cum_share"))
   }
 
-  /** Character-bigram language-model scoring — the cheap perplexity proxy of
-    * corpus quality filtering: fit `p(b|a) = c(ab)/c(a·)` on the corpus
-    * itself, then score each document by its average negative log-likelihood
-    * (nats/bigram). Gibberish, encoding noise, and boilerplate-free
-    * outliers surface as high cross-entropy against the corpus's own
-    * character statistics; no external model needed.
-    *
-    * Scale shape: one explode pass over the text compresses immediately to
-    * per-(doc, bigram) counts — the shuffle carries distinct-bigrams-per-doc
-    * rows, not one row per character; the model (distinct corpus bigrams ≤
-    * alphabet², thousands of rows) re-aggregates from those counts and
-    * broadcast-joins back. Cross-engine determinism: `ln` is quantized to
-    * integer MICRO-NATS (`floor(ln p · 1e6 + 0.5)` as a long) before the
-    * per-doc sum, so accumulation is exact integer math in any order on
-    * both engines — no FP-sum-order or double→decimal-cast hazards.
-    */
   /** Stage 1 of [[bigramLmScore]]: one row per (doc, distinct char bigram)
     * with its in-doc count. The native [[graft.expr.CharBigramCounts]]
     * histogram aggregates INSIDE the expression — no per-character row, no
@@ -1464,6 +1448,22 @@ object Text {
         explode(asCol(graft.expr.CharBigramCounts(asExpr(col(textCol)))))
           .as(Seq("bg", "c_db")))
 
+  /** Character-bigram language-model scoring — the cheap perplexity proxy of
+    * corpus quality filtering: fit `p(b|a) = c(ab)/c(a·)` on the corpus
+    * itself, then score each document by its average negative log-likelihood
+    * (nats/bigram). Gibberish, encoding noise, and boilerplate-free
+    * outliers surface as high cross-entropy against the corpus's own
+    * character statistics; no external model needed.
+    *
+    * Scale shape: one explode pass over the text compresses immediately to
+    * per-(doc, bigram) counts — the shuffle carries distinct-bigrams-per-doc
+    * rows, not one row per character; the model (distinct corpus bigrams ≤
+    * alphabet², thousands of rows) re-aggregates from those counts and
+    * broadcast-joins back. Cross-engine determinism: `ln` is quantized to
+    * integer MICRO-NATS (`floor(ln p · 1e6 + 0.5)` as a long) before the
+    * per-doc sum, so accumulation is exact integer math in any order on
+    * both engines — no FP-sum-order or double→decimal-cast hazards.
+    */
   def bigramLmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // The (doc, bigram) counts feed three consumers (corpus model, context
     // totals, per-doc scoring); exchange reuse does not unify them, and the

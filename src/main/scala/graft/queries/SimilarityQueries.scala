@@ -1079,18 +1079,18 @@ object SimilarityQueries {
 
     // MULTI-WORD dHash past the single-long boundary (SCALING.md's design
     // note, implemented): 101 lanes → 100 gradient bits in two 60-bit
-    // words, through the same Hamming-banded pipeline — at maxHamming 3
-    // the 4 bands are 25 bits wide, and band 2 ([50, 75)) STRADDLES the
-    // word boundary, exercising the two-word key stitch in the oracle
-    // gate, not just a spec. The oracle replays the hash as two explicit
-    // words over the shared generative lane CTEs and runs the quadratic
-    // two-popcount filter — banded recall 1.0 must reproduce it exactly.
-    // The lane count is pinned (not derived): dHashLanesForWide only
-    // leaves the [32, 61] range at corpus sizes no oracle-scale fixture
-    // reaches, and what q221 certifies is the wide ENGINE, whose geometry
-    // inputs are literals either way.
+    // words, through the same audioNearDupPairs pipeline as q202 — at
+    // maxHamming 3 the 4 bands are 25 bits wide, and band 2 ([50, 75))
+    // STRADDLES the word boundary, exercising the two-word key stitch in
+    // the oracle gate, not just a spec. The oracle replays the hash as two
+    // explicit words over the shared generative lane CTEs and runs the
+    // quadratic two-popcount filter — banded recall 1.0 must reproduce it
+    // exactly. The lane count is pinned (not derived): dHashLanesFor only
+    // passes 61 lanes at corpus sizes no oracle-scale fixture reaches, and
+    // what q221 certifies is the two-word ENGINE, whose geometry inputs are
+    // literals either way.
     Query("q221_audio_neardup_wide", (s, d) => {
-      Multimodal.audioNearDupPairsWide(wavDocs2k(s, d), "doc_id", "payload",
+      Multimodal.audioNearDupPairs(wavDocs2k(s, d), "doc_id", "payload",
           lanes = 101, maxHamming = 3)
         .select(col("a"), col("b"), col("hamming").cast("int").as("hamming"))
         .orderBy(col("a"), col("b"))
@@ -1187,12 +1187,15 @@ object SimilarityQueries {
         .orderBy(col("a"), col("b"))
     }, {
       // Replays the derived-geometry audio dHash with the derivation ITSELF
-      // in SQL — lanes = min(61, max(32, 1 + 4·w)) where w is the exact
-      // smallest shift with 2^w ≥ count(*), the same integer arithmetic
+      // in SQL — lanes = max(32, 1 + 4·w) where w is the exact smallest
+      // shift with 2^w ≥ count(*), the same integer arithmetic
       // dHashLanesFor runs (no float log2 on either side, so power-of-two
       // counts cannot diverge). SF-independent like every other oracle: at
       // the sf0.01 slice (500 docs) this is 37 lanes; a rule drift at ANY
       // scale fails the hash loudly. Verified at the query's maxHamming = 3.
+      // The SQL's LEAST(61, …) never binds (and neither does the engine's
+      // 121 cap): the doc_id < 2000 slice keeps w ≤ 11, so lanes ≤ 45 and
+      // the hash stays one word, as the single-word hx CTE assumes.
       val geo =
         """nn AS (SELECT count(*) AS n FROM documents WHERE doc_id < 2000),
           ww AS (SELECT MIN(t.w) AS w FROM range(1, 62) t(w), nn

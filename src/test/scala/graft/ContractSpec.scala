@@ -144,4 +144,22 @@ class ContractSpec extends AnyFunSuite {
       }.toList
     assert(hits.isEmpty, hits.mkString("absolute checkout paths:\n", "\n", ""))
   }
+
+  test("no scaladoc sits directly above another scaladoc in src/main/scala") {
+    // a doc comment followed at once by another documents nothing: the
+    // second one is what the definition below gets, so the first is an
+    // orphan of some other definition
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root), "run from the repository root (no src/main/scala)")
+    val hits = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toSeq.sortBy(_.toString)
+      .flatMap { p =>
+        new String(Files.readAllBytes(p), UTF_8).linesIterator.sliding(2).zipWithIndex.collect {
+          case (Seq(a, b), i) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+            s"$p:${i + 2}: ${b.trim}"
+        }
+      }.toList
+    assert(hits.isEmpty, hits.mkString("orphaned scaladocs:\n", "\n", ""))
+  }
 }

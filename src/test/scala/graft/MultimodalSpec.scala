@@ -235,7 +235,7 @@ class MultimodalSpec extends AnyFunSuite {
     val df = Seq((1L, wavBytes(8000, base)), (2L, wavBytes(8000, bumped)),
       (3L, wavBytes(8000, other))).toDF("id", "payload")
     val hs = Multimodal.decodeFeatures(df, "id", "payload", dim = 32)
-      .select($"id", Multimodal.audioDHash($"features", 32).as("h"))
+      .select($"id", Multimodal.audioDHash($"features", 32).head.as("h"))
       .as[(Long, Long)].collect().toMap
     assert(hs(1L) == hs(2L), "a uniform offset must not move the dHash")
     assert(hs(1L) != hs(3L), "an unrelated signal must hash differently")
@@ -275,7 +275,7 @@ class MultimodalSpec extends AnyFunSuite {
       .select("a", "b", "hamming").as[(Long, Long, Int)].collect().toSet
     // brute force over the same decoded hashes
     val hs = Multimodal.decodeFeatures(df, "doc_id", "payload", 32)
-      .select($"doc_id", Multimodal.audioDHash($"features", 32).as("h"))
+      .select($"doc_id", Multimodal.audioDHash($"features", 32).head.as("h"))
       .as[(Long, Long)].collect().toMap
     val brute = (for {
       a <- 0L until 12L; b <- (a + 1) until 12L
@@ -674,35 +674,50 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("dHash index: persisted search ≡ direct filter; appends admit; deletes resurrect") {
-    def clip(seed: Int, off: Int) =
-      wavBytes(8000, (0 until 64).map(i => ((i * seed) % 50000) - 25000 + off))
-    val corpus = Seq((1L, clip(104729, 0)), (2L, clip(31337, 0))).toDF("doc_id", "payload")
-    val batch = Seq(
-      (10L, clip(104729, 3)),  // uniform offset of stored clip 1 → dropped
-      (11L, clip(7919, 0)))    // unrelated → kept
-      .toDF("doc_id", "payload")
-    val prefix = "mmspec_dhidx"
-    Multimodal.writeDHashIndex(corpus, "doc_id", "payload", 32, 2, prefix, buckets = 2)
-    def survivors(b: org.apache.spark.sql.DataFrame) =
-      Multimodal.audioDedupAgainstIndex(b, "doc_id", "payload", 32, 2, prefix)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(survivors(batch) == Seq(11L))
-    // admit the survivor, then a near-dup of IT must be dropped
-    Multimodal.writeDHashIndex(batch.filter($"doc_id" === 11L),
-      "doc_id", "payload", 32, 2, prefix, mode = "append", buckets = 2)
-    val batch2 = Seq((20L, clip(7919, 5))).toDF("doc_id", "payload")
-    assert(survivors(batch2) == Seq.empty, "appended clip must block its offsets")
-    // tombstone clip 1: its offset (10) is admissible again — but 11 is
-    // now STORED (appended above), so it self-matches and drops
-    Multimodal.deleteFromDHashIndex(spark, Seq(Tuple1(1L)).toDF("doc_id"), "doc_id", prefix)
-    assert(survivors(batch) == Seq(10L), "deleting the stored clip readmits its offsets")
-    // compaction folds the tombstone in physically; semantics unchanged
-    Multimodal.compactDHashIndex(spark, prefix, buckets = 2)
-    assert(survivors(batch) == Seq(10L))
+    // one word (32 lanes) and two (101 lanes, band 2 straddling the word
+    // boundary): the same lifecycle, and the table carries every word
+    for ((lanes, maxHamming, cols) <- Seq(
+        (32, 2, Seq("id" -> "bigint", "h" -> "bigint", "band" -> "int", "key" -> "bigint")),
+        (101, 3, Seq("id" -> "bigint", "h" -> "bigint", "h1" -> "bigint", "band" -> "int",
+          "key" -> "bigint")))) {
+      // two samples per lane: a uniform offset moves every lane equally
+      def clip(seed: Int, off: Int) =
+        wavBytes(8000, (0 until 2 * lanes).map(i => ((i * seed) % 50000) - 25000 + off))
+      val corpus = Seq((1L, clip(104729, 0)), (2L, clip(31337, 0))).toDF("doc_id", "payload")
+      val batch = Seq(
+        (10L, clip(104729, 3)),  // uniform offset of stored clip 1 → dropped
+        (11L, clip(7919, 0)))    // unrelated → kept
+        .toDF("doc_id", "payload")
+      val prefix = s"mmspec_dhidx$lanes"
+      Multimodal.writeDHashIndex(corpus, "doc_id", "payload", lanes, maxHamming, prefix,
+        buckets = 2)
+      def schema = spark.table(s"${prefix}_idx").schema
+        .map(f => f.name -> f.dataType.simpleString)
+      assert(schema == cols, s"$lanes lanes")
+      def survivors(b: org.apache.spark.sql.DataFrame) =
+        Multimodal.audioDedupAgainstIndex(b, "doc_id", "payload", lanes, maxHamming, prefix)
+          .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(survivors(batch) == Seq(11L))
+      // admit the survivor, then a near-dup of IT must be dropped
+      Multimodal.writeDHashIndex(batch.filter($"doc_id" === 11L),
+        "doc_id", "payload", lanes, maxHamming, prefix, mode = "append", buckets = 2)
+      val batch2 = Seq((20L, clip(7919, 5))).toDF("doc_id", "payload")
+      assert(survivors(batch2) == Seq.empty, "appended clip must block its offsets")
+      // tombstone clip 1: its offset (10) is admissible again — but 11 is
+      // now STORED (appended above), so it self-matches and drops
+      Multimodal.deleteFromDHashIndex(spark, Seq(Tuple1(1L)).toDF("doc_id"), "doc_id", prefix)
+      assert(survivors(batch) == Seq(10L), "deleting the stored clip readmits its offsets")
+      // compaction folds the tombstone in physically; semantics unchanged
+      Multimodal.compactDHashIndex(spark, prefix, buckets = 2)
+      assert(schema == cols, s"$lanes lanes, compacted")
+      assert(spark.table(s"${prefix}_idx").select("id").distinct().as[Long].collect()
+        .sorted.toSeq == Seq(2L, 11L))
+      assert(survivors(batch) == Seq(10L))
+    }
   }
 
-  test("wide (two-word) dHash: banded pairs ≡ brute force; word-straddling " +
-      "band keys; geometry guard; widened rule") {
+  test("one Hamming path: lanes 61 and 62 (one word, two) and 101 ≡ brute force " +
+      "over the hash words; word-straddling band keys; geometry guard; the rule's cap") {
     import org.apache.spark.sql.functions.{col => c}
     // 40 clips in groups of 4 (r=0,1,2 offsets of a base, r=3 unrelated),
     // long enough that 101 lanes all receive samples
@@ -715,40 +730,55 @@ class MultimodalSpec extends AnyFunSuite {
       (id.toLong, payload)
     }
     val df = rows.toDF("doc_id", "payload")
-    val got = Multimodal.audioNearDupPairsWide(df, "doc_id", "payload",
-        lanes = 101, maxHamming = 3)
-      .select(c("a"), c("b"), c("hamming")).as[(Long, Long, Long)]
-      .collect().toSet
-    // brute force over the SAME wide hashes (two-word popcount sum)
-    val hs = Multimodal.audioHashesWide(df, "doc_id", "payload", 101)
-      .as[(Long, Long, Long)].collect()
-    val brute = (for {
-      (a, a0, a1) <- hs; (b, b0, b1) <- hs if a < b
-      h = java.lang.Long.bitCount(a0 ^ b0) + java.lang.Long.bitCount(a1 ^ b1)
-      if h <= 3
-    } yield (a, b, h.toLong)).toSet
-    assert(got == brute, s"banded ${got.size} pairs vs brute ${brute.size}")
-    assert(brute.nonEmpty, "fixture must produce at least one qualifying pair")
+    // the hash words per clip, straight from audioDHash
+    def words(lanes: Int): Map[Long, Seq[Long]] =
+      Multimodal.decodeFeatures(df, "doc_id", "payload", lanes)
+        .select(c("doc_id") +: Multimodal.audioDHash(c("features"), lanes): _*)
+        .collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
+    def check(lanes: Int, maxHamming: Int, nWords: Int): Set[(Long, Long, Long)] = {
+      val hs = words(lanes)
+      assert(hs.values.forall(_.size == nWords), s"$lanes lanes must give $nWords words")
+      val got = Multimodal.audioNearDupPairs(df, "doc_id", "payload", lanes, maxHamming)
+        .select(c("a"), c("b"), c("hamming")).as[(Long, Long, Long)].collect()
+      // brute force over the SAME words (per-word popcount sum)
+      val brute = (for {
+        (a, wa) <- hs.toSeq; (b, wb) <- hs.toSeq if a < b
+        h = wa.zip(wb).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
+        if h <= maxHamming
+      } yield (a, b, h.toLong)).toSet
+      assert(got.toSet == brute, s"$lanes lanes: banded ${got.size} pairs vs brute ${brute.size}")
+      assert(brute.nonEmpty, s"$lanes lanes: fixture must produce a qualifying pair")
+      // exactly-once: no duplicate (a, b) from multi-band collisions
+      assert(got.map { case (a, b, _) => (a, b) }.distinct.length == got.length)
+      brute
+    }
+    // the old single-long boundary from both sides: 61 lanes is one full
+    // word, 62 puts gradient bit 60 alone in the second word
+    check(61, 2, 1)
+    check(62, 2, 2)
+    assert(words(62).values.forall(_(1) >>> 1 == 0), "word 1 holds bit 60 only")
+    // 101 lanes, maxHamming 3: four 25-bit bands, band 2 ([50, 75))
+    // straddles the word boundary
+    val brute = check(101, 3, 2)
     // every within-group offset pair qualifies (gradient-sign invariance is
     // approximate at the non-divisor lane count, but ≤ 3 bits here)
     // — implied by the equality above; spot-check one expected pair exists
     assert(brute.exists { case (a, b, _) => b - a <= 2 && a / 4 == b / 4 })
-    // exactly-once: no duplicate (a, b) from multi-band collisions
-    val ab = got.toSeq.map { case (a, b, _) => (a, b) }
-    assert(ab.distinct.size == ab.size)
     // degenerate geometry fails loudly: lanes=101 (100 bits), maxHamming 50
     // → 51 bands of ceil-width 2 → band 50 starts at bit 100: bitless
     val ex = intercept[IllegalArgumentException] {
-      Multimodal.audioNearDupPairsWide(df, "doc_id", "payload",
+      Multimodal.audioNearDupPairs(df, "doc_id", "payload",
         lanes = 101, maxHamming = 50).collect()
     }
     assert(ex.getMessage.contains("degenerate") || ex.getMessage.contains("width"))
-    // widened rule: coincides with the single-word rule inside its range,
-    // lifts the cap past it, clamps at the two-word limit
-    assert(Multimodal.dHashLanesForWide(1000L) == Multimodal.dHashLanesFor(1000L))
-    assert(Multimodal.dHashLanesFor(300000000L) == 61) // single-word cap
-    assert(Multimodal.dHashLanesForWide(300000000L) == 1 + 3 * 21) // 64 — past it
-    assert(Multimodal.dHashLanesForWide(Long.MaxValue) == 121) // two-word cap
+    // one band past one word (maxHamming 0 at 62 lanes) fails loudly too
+    val wide = intercept[IllegalArgumentException] {
+      Multimodal.audioNearDupPairs(df, "doc_id", "payload", lanes = 62, maxHamming = 0)
+    }
+    assert(wide.getMessage.contains("width"), wide.getMessage)
+    // the rule keeps widening past 61 lanes and clamps at the two-word limit
+    assert(Multimodal.dHashLanesFor(300000000L) == 1 + 3 * 21) // 64
+    assert(Multimodal.dHashLanesFor(Long.MaxValue) == 121)
   }
 
   test("dHash index geometry sidecar: derived writes record it, stored probes " +
@@ -1074,8 +1104,9 @@ class MultimodalSpec extends AnyFunSuite {
     // 10^6 clips at the default target: 2^12 keys per band (the SCALING.md
     // knee the fixed 32-lane default hits is pushed out by 2 bits here)
     assert(Multimodal.dHashLanesFor(1000000, 2) == 37)
-    // cap: the single-long boundary
-    assert(Multimodal.dHashLanesFor(1L << 40, 2) == 61)
+    // past the single-long boundary the rule keeps widening (2^40 clips →
+    // 33-bit band keys → 1 + 3·33 lanes, a two-word hash)
+    assert(Multimodal.dHashLanesFor(1L << 40, 2) == 100)
     // integer ceil-log2: exact at powers of two (a float log2 can land on
     // either side and diverge from the SQL oracle's integer derivation)
     assert(Multimodal.dHashLanesFor(512, 3, 1) == 37)  // 2^9 = 512 -> w = 9

@@ -115,6 +115,28 @@ class SummariesSpec extends AnyFunSuite {
     assert(multi.filter(_._2 == null).forall(_._4 == null)) // null value → null bin
   }
 
+  test("quantileBins at 1024 bins stays in whole-stage codegen and counts cuts <= v " +
+      "under Spark's double ordering") {
+    // duplicates, both zeros, NaN (largest in Spark's ordering) and NULL
+    val vs: Seq[Option[Double]] = (0 until 3000).map(i => Some((i * 7919 % 2999) / 7.0)) ++
+      Seq(Some(-0.0), Some(0.0), Some(Double.NaN), Some(Double.NaN), None)
+    val df = vs.toDF("v")
+    val key = "spark.sql.codegen.fallback"
+    spark.conf.set(key, "false") // a method past 64 KB now fails instead of running unfused
+    val got = try {
+      Summaries.quantileBin(df, "v", 1024).select("v", "bin")
+        .as[(Option[Double], Option[Int])].collect()
+    } finally spark.conf.unset(key)
+    val cuts = Summaries.exactQuantileArrays(df,
+        Seq(("v", (1 until 1024).map(_ / 1024.0), "c")))
+      .select("c").as[Seq[Double]].head()
+    def rank(v: Double) = cuts.count(c =>
+      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(c, v) <= 0)
+    assert(got.length == vs.length)
+    for ((v, bin) <- got) assert(bin == v.map(rank), s"v=$v")
+    assert(got.exists(_._2.contains(1023)), "NaN rows rank past every finite cut")
+  }
+
   test("categoryDrift: PSI terms on shared categories only, zero when unchanged") {
     import spark.implicits._
     val ref = (Seq.fill(10)("a") ++ Seq.fill(10)("b")).map(Tuple1(_)).toDF("lang")
