@@ -12,13 +12,15 @@ import graft.ops._
   * (`app.py:245-270`) → named result catalog (`app.py:272-278`).
   *
   * Spark-first shape: [[ingestRaw]] resolves schema driver-side (a schema
-  * must exist before a plan does), then everything through the catalog is
-  * ONE lazy plan per output table — Catalyst fuses the whole normalize chain
-  * into the scan stage, and the only shuffles are the dedup window and the
-  * two group-by summaries. The exports run the catalog's tables as
-  * concurrent jobs through [[Concurrent.all]] (they are independent actions;
-  * one after another, the scheduler idles between small jobs), and a
-  * failure in one cancels the others.
+  * must exist before a plan does); [[run]] builds the catalog and runs its
+  * shared part once — the only shuffles are the dedup window and the two
+  * group-by summaries, and Catalyst fuses the whole normalize chain into
+  * the scan stage that feeds the dedup shuffle. Each catalog table is a
+  * plan over those shuffle outputs ([[Checkpoints.freeze]]), so every
+  * export or display of it runs one job and no shuffle. The exports run
+  * the catalog's tables as concurrent jobs through [[Concurrent.all]]
+  * (they are independent actions; one after another, the scheduler idles
+  * between small jobs), and a failure in one cancels the others.
   */
 object Pipeline {
 
@@ -57,8 +59,19 @@ object Pipeline {
   }
 
   /** The consolidated run (`unify_cortex` + catalog assembly,
-    * `app.py:219-278`). Returns the named result catalog; every value is a
-    * lazy DataFrame — materialization happens only at export/display.
+    * `app.py:219-278`). Returns the named result catalog in sheet order:
+    * `base_limpa`, then `resumo_status`, `resumo_os` and `falhas_upgrade`
+    * where the uploads have their columns.
+    *
+    * The reference reads every catalog table several times per run (count,
+    * display, workbook export); here the dedup shuffle and the two summary
+    * shuffles run once, in this call ([[Checkpoints.freeze]]: `base_limpa`
+    * first, then both summaries concurrently), and every later action on a
+    * table reuses them. So errors in those stages surface here, not at
+    * export. Nothing is stored in the block store; the shuffle files live
+    * until the catalog is garbage collected, or until a long-lived caller
+    * frees them with `catalog.values.foreach(Checkpoints.release)` after
+    * its last action (a later read then recomputes).
     *
     * Dedup determinism: the reference resolves equal-recency ties by
     * encounter order (`keep="first"`), which has no distributed meaning; we
@@ -74,32 +87,31 @@ object Pipeline {
     val recency = Seq("last_seen", "last_upgrade_status_time").filter(base.columns.contains)
     val tieBreak: Seq[Column] =
       base.columns.toSeq.filterNot(c => keys.contains(c) || recency.contains(c)).map(col)
-    val baseLimpa =
+    val baseLimpa = Checkpoints.freeze(
       if (keys.nonEmpty) Dedup.keepLatest(base, keys, recency, tieBreak)
-      else Dedup.distinctRows(base) // reference fallback `app.py:242`
+      else Dedup.distinctRows(base)) // reference fallback `app.py:242`
 
-    val catalog = scala.collection.mutable.LinkedHashMap[String, DataFrame](
-      "base_limpa" -> baseLimpa)
-    if (base.columns.contains("endpoint_status"))
-      catalog += "resumo_status" -> Summaries.groupCount(baseLimpa, "endpoint_status")
-    if (base.columns.contains("operating_system"))
-      catalog += "resumo_os" -> Summaries.groupCount(baseLimpa, "operating_system")
+    val summaries = Concurrent.all(base.sparkSession)(
+      Seq("resumo_status" -> "endpoint_status", "resumo_os" -> "operating_system")
+        .filter { case (_, c) => base.columns.contains(c) }
+        .map { case (name, c) =>
+          () => name -> Checkpoints.freeze(Summaries.groupCount(baseLimpa, c)) })
     val failCols = Seq("last_upgrade_status", "last_upgrade_failure_reason")
       .filter(base.columns.contains)
-    if (failCols.nonEmpty)
-      catalog += "falhas_upgrade" ->
-        baseLimpa.filter(Clean.keywordAny(failCols.map(col), Clean.FailurePattern))
+    val falhas = failCols.headOption.map(_ =>
+      "falhas_upgrade" -> baseLimpa.filter(Clean.keywordAny(failCols.map(col), Clean.FailurePattern)))
     // ListMap, not .toMap: the catalog's iteration order is part of the
     // contract (base_limpa must stay the first sheet the xlsx export writes;
     // a plain Map over 4 entries only PRESERVES insertion order by accident
     // and silently stops at the 5th entry)
-    scala.collection.immutable.ListMap(catalog.toSeq: _*)
+    scala.collection.immutable.ListMap(
+      (("base_limpa" -> baseLimpa) +: summaries) ++ falhas: _*)
   }
 
   /** Run `f` over every catalog table concurrently ([[Concurrent.all]]):
-    * the tables are independent jobs over one shared plan, so the scheduler
-    * overlaps them instead of idling between small jobs. Results come back
-    * in catalog order.
+    * the tables are independent jobs, each over the shuffle outputs [[run]]
+    * already produced, so the scheduler overlaps them instead of idling
+    * between small jobs. Results come back in catalog order.
     */
   private def eachTable[T](catalog: Map[String, DataFrame])(f: (String, DataFrame) => T): Seq[T] =
     catalog.headOption.fold(Seq.empty[T]) { case (_, df) =>
@@ -109,7 +121,8 @@ object Pipeline {
   /** S6 — multi-table export of a named catalog (the engine-side contract of
     * the reference's multi-sheet workbook, `df_to_xlsx_bytes` `app.py:35-134`;
     * formatting is presentation-layer, deliberately out of engine scope).
-    * The tables are written concurrently; on a failure the other writes are
+    * The tables are written concurrently, one job each over a [[run]]
+    * catalog (its shuffles already ran); on a failure the other writes are
     * cancelled and the first error is rethrown.
     */
   def exportCatalog(catalog: Map[String, DataFrame], dir: String, format: String = "parquet"): Unit =

@@ -18,6 +18,9 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   *    the job. Costs one filesystem write per pin.
   *
   * Set `spark.checkpoint.dir` and every pin in the engine is reliable.
+  *
+  * [[freeze]] is the other way to share work: it keeps the lineage and
+  * shares a plan's shuffle outputs, storing no rows.
   */
 object Checkpoints {
 
@@ -33,6 +36,20 @@ object Checkpoints {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)
 
+  /** Run `df`'s shuffles once and share them: every shuffle-map stage of
+    * its plan runs NOW, and the result is a plan over those outputs, so
+    * each later action on it (or on a plan built from it) runs only its
+    * final stage instead of re-running the shuffles from the sources.
+    * Nothing goes into the block store and the lineage is kept: a lost map
+    * output is recomputed, never a failed job. The right tool for a table
+    * several independent actions read (an exported catalog); [[pin]] stays
+    * the tool where lineage must be cut (iterative rounds) or a recompute
+    * is too dear. Errors in the shuffled part of the plan surface here.
+    * The shuffle files live until the result is garbage collected or
+    * [[release]]d.
+    */
+  def freeze(df: DataFrame): DataFrame = CheckpointBridge.freeze(df)
+
   /** Free a SUPERSEDED round's pinned blocks (no-op for reliable
     * checkpoints, whose data lives in files, not the block store). Callers
     * must guarantee the Dataset is never read again — a localCheckpoint
@@ -47,7 +64,12 @@ object Checkpoints {
     * plan still references. Long-lived sessions (a streaming foreachBatch
     * loop calling upsert per batch) must do this or accumulate dead
     * blocks until eviction churn sets in; one-shot jobs can skip it.
+    *
+    * A [[freeze]]d node's shuffle outputs are freed too — every shuffle in
+    * its lineage, including those of frozen inputs it was built from.
+    * Unlike a released local pin, a later read of a released frozen frame
+    * is still correct: it recomputes the shuffles from lineage.
     */
   def release(ds: org.apache.spark.sql.Dataset[_]): Unit =
-    CheckpointBridge.unpersistCheckpoint(ds)
+    CheckpointBridge.release(ds)
 }

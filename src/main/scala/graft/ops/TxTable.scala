@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * {{{
   * root/
-  *   _log/00000000000000000007.commit   // manifest, made live by ONE rename
+  *   _log/00000000000000000007.commit   // manifest, made live by ONE atomic claim
   *   data/00000000000000000007-0-t/     // immutable parquet dirs
   * }}}
   *
@@ -48,16 +48,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    readable, so keep-2 supports only adjacent-version diffs).
   *
   *  - **Concurrency**: commits are optimistic. A writer stages its data,
-  *    allocates the next version, and attempts the manifest rename; if
+  *    allocates the next version, and attempts the manifest claim; if
   *    another writer claimed that version first, it re-lists the log,
   *    re-allocates, and re-attempts — the staged data dirs carry a unique
   *    writer token so they never collide and never need re-writing. The
   *    version-claim check runs under a per-root JVM lock, so in-process
   *    committers (the common shape: several sinks of one application) are
   *    fully serialized at the claim point; across processes the claim is
-  *    exists-check + rename, which is safe wherever rename-to-existing
-  *    fails (HDFS and object-store committers — the deployment targets) and
-  *    best-effort on a raw posix local filesystem. Each manifest records
+  *    one atomic create-if-absent step ([[claim]]): a hard link on a local
+  *    filesystem (posix rename would replace a foreign manifest silently),
+  *    a rename that fails on an existing target elsewhere (HDFS and
+  *    object-store committers — the deployment targets). Each manifest records
   *    its `writer` token for audit. The log is one small file per commit,
   *    so a long-lived table should periodically [[compact]], which folds
   *    history into one `replace` commit the resolver can fold just as
@@ -137,10 +138,9 @@ object TxTable {
     * reader's listing and its read can reap both the listed generation and
     * its grace predecessor, which is why [[readRetention]] re-lists once
     * before degrading to the default. Concurrent setRetention writers can
-    * also compute the same next generation; the rename either fails (HDFS
-    * is loud, other filesystems vary) — retried here with a recomputed
-    * generation — or one writer's file wins whole (rename is atomic per
-    * file), which is the same outcome as serial last-writer-wins.
+    * also compute the same next generation; they claim it through the
+    * same create-if-absent [[claim]] as a commit, and the loser recomputes
+    * the generation and retries.
     */
   def setRetention(spark: SparkSession, root: String, keepSnapshots: Int): Unit = {
     require(keepSnapshots >= 2,
@@ -155,20 +155,20 @@ object TxTable {
     try out.write(s"graft-txret v1\nkeep $keepSnapshots\n"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    // A racing setRetention can claim the same next generation; rename to
-    // an existing target fails on HDFS — recompute and retry rather than
-    // abort, since the other writer advancing the generation is progress,
-    // not failure. Bounded attempts: each loss means someone else renamed.
+    // A racing setRetention can claim the same next generation; the claim
+    // then fails — recompute and retry rather than abort, since the other
+    // writer advancing the generation is progress, not failure. Bounded
+    // attempts: each loss means someone else claimed.
     val gens = (1 to 5).iterator.map { _ =>
       val g = retentionGens(fs, rp)
       val next = g.lastOption.map(_._1 + 1).getOrElse(1L)
       val target = new Path(logDir(rp), f"retention.v$next%09d")
-      if (fs.rename(tmp, target)) Some(g) else None
+      if (claim(fs, tmp, target)) Some(g) else None
     }.collectFirst { case Some(g) => g }
       .getOrElse(throw new java.io.IOException(s"retention write failed at $root"))
     // Only now is superseded state garbage: reap old generations and the
     // legacy single file, keeping the newest predecessor as a grace copy
-    // for a reader that listed the directory just before our rename.
+    // for a reader that listed the directory just before our claim.
     gens.dropRight(1).foreach { case (_, p) => fs.delete(p, false) }
     fs.delete(retentionPath(rp), false)
   }
@@ -276,7 +276,7 @@ object TxTable {
 
   /** Highest version any `.commit` FILENAME claims, parseable or not — the
     * version allocator must never re-issue a number a corrupt/foreign file
-    * already occupies, or the atomic-rename target exists forever and the
+    * already occupies, or the claim target exists forever and the
     * root wedges with a spurious concurrent-writer error.
     */
   private def maxClaimedVersion(fs: FileSystem, root: Path): Long = {
@@ -617,10 +617,35 @@ object TxTable {
     Entry("stage", table, rel) // mode filled in by commit
   }
 
-  /** Per-root claim locks: in one JVM, the version-claim check-and-rename is
-    * serialized, so in-process concurrent committers can never replace each
-    * other's manifest (posix rename overwrites silently; HDFS/object-store
-    * renames fail on an existing target and need no lock).
+  /** Move `tmp` to `target` only if `target` does not exist, atomically
+    * across processes; false (and `tmp` left in place) if it does. On a
+    * local filesystem a rename would replace a foreign writer's file
+    * silently, so the claim is a hard link, which fails with
+    * `FileAlreadyExistsException` when the target exists; the checksum
+    * sidecar follows once the claim holds, then `tmp` goes. Other schemes
+    * rename, which fails on an existing target there (HDFS, object-store
+    * committers).
+    */
+  private[graft] def claim(fs: FileSystem, tmp: Path, target: Path): Boolean =
+    if (fs.getUri.getScheme != "file") !fs.exists(target) && fs.rename(tmp, target)
+    else {
+      def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      try java.nio.file.Files.createLink(local(target), local(tmp))
+      catch { case _: java.nio.file.FileAlreadyExistsException => return false }
+      fs match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+          val crc = local(c.getChecksumFile(tmp))
+          if (java.nio.file.Files.exists(crc))
+            java.nio.file.Files.move(crc, local(c.getChecksumFile(target)),
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        case _ => ()
+      }
+      java.nio.file.Files.delete(local(tmp))
+      true
+    }
+
+  /** Per-root claim locks: in one JVM, the version claim is serialized, so
+    * in-process concurrent committers never race the [[claim]] itself.
     */
   private val rootLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(root: Path): Object =
@@ -637,7 +662,7 @@ object TxTable {
     * Optimistic concurrency: the data is staged ONCE (under a unique writer
     * token), then up to `maxAttempts` version claims are attempted — each
     * re-listing the log, re-allocating the next version, and re-attempting
-    * the manifest rename. Losing a claim costs one small manifest write,
+    * the manifest claim. Losing a claim costs one small manifest write,
     * never a data re-write. Only after `maxAttempts` straight losses (a
     * pathologically contended root) does the commit fail loudly — and the
     * staged dir is removed so nothing leaks.
@@ -696,7 +721,7 @@ object TxTable {
         maxClaimedVersion(fs, rp)) + 1
       if (entries == null) {
         // Stage the writes CONCURRENTLY: each stages into its own new dir,
-        // so the jobs are independent until the manifest rename, and a
+        // so the jobs are independent until the manifest claim, and a
         // multi-table commit's staging wall is the largest write, not the
         // sum. Entry order is preserved, so same-table double writes keep
         // their last-wins resolution. When any write fails, Concurrent.all
@@ -719,17 +744,15 @@ object TxTable {
             throw e
           }
       }
-      // temp manifest + rename: the ONE atomic step. A reader lists the log
-      // before or after this rename; there is no in-between.
+      // temp manifest + claim: the ONE atomic step. A reader lists the log
+      // before or after the claim; there is no in-between.
       val target = commitPath(rp, v)
       val tmp = new Path(logDir(rp), f".$v%020d-$token.tmp")
       val out = fs.create(tmp, true)
       try out.write(renderManifest(guard, batchId, entries, token, writeSchemas)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      val claimed = lockFor(rp).synchronized {
-        !fs.exists(target) && fs.rename(tmp, target)
-      }
+      val claimed = lockFor(rp).synchronized(claim(fs, tmp, target))
       if (claimed) {
         // re-list for GC: commits interleaved by OTHER writers since our
         // listing must count as live references
@@ -807,7 +830,7 @@ object TxTable {
     * retained-snapshot grace window ([[setRetention]]) survives
     * checkpointing and [[readAsOf]] can still resolve every retained
     * version. Ordering is crash-safe: the checkpoint lands by atomic
-    * rename FIRST; the folded manifests are deleted after, and the reader
+    * claim FIRST; the folded manifests are deleted after, and the reader
     * tolerates both being present (it ignores manifests at or below the
     * checkpoint).
     */
@@ -842,8 +865,13 @@ object TxTable {
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (!fs.rename(tmp, ckptPath(root, v)))
-      throw new java.io.IOException(s"checkpoint rename failed at version $v")
+    // a concurrent committer's gc may fold the same prefix first: its
+    // checkpoint of version v holds exactly this body, so losing is fine
+    if (!claim(fs, tmp, ckptPath(root, v))) {
+      fs.delete(tmp, false)
+      if (!fs.exists(ckptPath(root, v)))
+        throw new java.io.IOException(s"checkpoint claim failed at version $v")
+    }
     // prune what the checkpoint folded: manifests <= v, checkpoints < v
     fs.listStatus(ld).foreach { st =>
       val n = st.getPath.getName

@@ -35,14 +35,34 @@ object ListenerBridge {
   * private[sql].
   */
 object CheckpointBridge {
-  /** Drop the block-store data behind a checkpointed Dataset. Safe ONLY
-    * when nothing will read the Dataset again: a localCheckpoint cannot
-    * recompute (lineage is severed), so a later action on it would fail.
+  /** A Dataset checkpoint without the block-store mark: execute the plan
+    * under its own SQL execution (with AQE on, this runs every shuffle-map
+    * stage now) and wrap the resulting RDD in a `LogicalRDD`. Later actions
+    * on the result read those shuffle outputs instead of re-running the map
+    * stages (the DAGScheduler skips a map stage whose outputs exist); the
+    * full lineage stays, so a lost map output is recomputed, not fatal.
     */
-  def unpersistCheckpoint(ds: org.apache.spark.sql.Dataset[_]): Unit =
+  def freeze(ds: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.DataFrame = {
+    val d  = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = d.queryExecution
+    val rdd = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("freeze"))(qe.executedPlan.execute())
+    org.apache.spark.sql.classic.Dataset.ofRows(d.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, d, isStreaming = false))
+  }
+
+  /** Drop what the `LogicalRDD` nodes of `ds`'s plan hold: the block-store
+    * data of a checkpointed one, and the shuffle outputs in the lineage of
+    * one that is not (a [[freeze]]d node). Safe ONLY when nothing will read
+    * a checkpoint again: a localCheckpoint cannot recompute (lineage is
+    * severed), so a later action on it would fail. A frozen node keeps its
+    * lineage, so a later action on it recomputes the shuffles.
+    */
+  def release(ds: org.apache.spark.sql.Dataset[_]): Unit =
     ds.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
+        if (!l.rdd.isCheckpointed) l.rdd.cleanShuffleDependencies(blocking = false)
       case _ => ()
     }
 }

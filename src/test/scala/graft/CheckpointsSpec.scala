@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ShuffleBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Clustering, Summaries, Text}
+import graft.ops.{Checkpoints, Clustering, Summaries, Text}
 
 /** The engine's one pin policy ([[graft.ops.Checkpoints]]): a checkpoint dir
   * on the session turns every pin reliable, results unchanged. The iterative
@@ -60,5 +61,30 @@ class CheckpointsSpec extends AnyFunSuite {
         }
       }.toList
     assert(hits.isEmpty, hits.mkString("pin outside Checkpoints.pin:\n", "\n", ""))
+  }
+
+  test("freeze shares its shuffles; release frees them and a later read recomputes") {
+    val sc = spark.sparkContext
+    def shuffleStages[T](body: => T): (Int, T) = {
+      val (_, stages, r) = TestSpark.jobsAndShuffleStages(body)
+      (stages, r)
+    }
+    def collected(df: DataFrame) = df.collect().toSeq.sortBy(_.getInt(0))
+    val plain = (1 to 200).map(i => (i % 7, i.toLong)).toDF("k", "v")
+      .groupBy("k").agg(sum("v").as("s"))
+    val pinned = sc.getPersistentRDDs.keySet
+    val (ran, frozen) = shuffleStages(Checkpoints.freeze(plain))
+    assert(ran == 1, "freeze must run the shuffle-map stage now")
+    assert((sc.getPersistentRDDs.keySet -- pinned).isEmpty, "freeze must store nothing")
+    val ids = ShuffleBridge.shuffleIds(frozen)
+    assert(ids.nonEmpty && ids.forall(ShuffleBridge.availableOutputs(_) > 0))
+    val want = collected(plain)
+    assert(shuffleStages(collected(frozen)) == ((0, want)),
+      "a read of a frozen frame must not re-run its shuffle")
+
+    Checkpoints.release(frozen)
+    assert(ids.forall(ShuffleBridge.availableOutputs(_) == 0), "release must free the shuffles")
+    // unlike a released local pin, the frozen frame still reads: from lineage
+    assert(shuffleStages(collected(frozen)) == ((1, want)))
   }
 }

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.CheckpointDirBridge
+import org.apache.spark.sql.graftbridge.{CheckpointDirBridge, ListenerBridge}
 
 /** One shared local session for every suite (Spark session startup dominates
   * test wall-clock otherwise). Built via [[Sessions.local]] so tests run
@@ -34,5 +35,27 @@ object TestSpark {
       CheckpointDirBridge.set(sc, prev)
       FileUtils.deleteDirectory(dir.toFile)
     }
+  }
+
+  /** Evaluate `body` and count what it ran: (jobs started, stages that
+    * wrote shuffle, result). The listener bus is flushed on both sides, so
+    * the counts are exact. A skipped stage (its map outputs already exist)
+    * never completes, so it is not counted.
+    */
+  def jobsAndShuffleStages[T](body: => T): (Int, Int, T) = {
+    val jobs, shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m != null && m.shuffleWriteMetrics.recordsWritten > 0) shuffleStages.incrementAndGet()
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.flush(sc)
+    sc.addSparkListener(l)
+    try { val r = body; ListenerBridge.flush(sc); (jobs.get(), shuffleStages.get(), r) }
+    finally sc.removeSparkListener(l)
   }
 }

@@ -588,4 +588,45 @@ class TxTableSpec extends AnyFunSuite {
       "the pre-evolution row must stay NULL-filled after the fold")
     assert(snap.count() == 71L)
   }
+
+  test("claim onto an existing target returns false and leaves the target's bytes unchanged") {
+    // A posix rename replaces its target silently, so an exists-check plus
+    // rename lets a second process overwrite a manifest another one already
+    // claimed; the claim must be atomic create-if-absent. Checked on the
+    // session's local filesystem (checksum sidecars; its rename refuses an
+    // existing target, but only after a separate exists check) and on the
+    // raw one, whose rename is the bare posix replace.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val session = new org.apache.hadoop.fs.Path(base()).getFileSystem(conf)
+    val raw = org.apache.hadoop.fs.FileSystem.getLocal(conf).getRawFileSystem
+    for (fs <- Seq(session, raw)) {
+      val dir = new org.apache.hadoop.fs.Path(base())
+      def write(p: org.apache.hadoop.fs.Path, body: String): Unit = {
+        val out = fs.create(p, true)
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+      }
+      def read(p: org.apache.hadoop.fs.Path): String = {
+        val in = fs.open(p) // verifies the checksum sidecar where there is one
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+      val target = new org.apache.hadoop.fs.Path(dir, "00000000000000000001.commit")
+      val first  = new org.apache.hadoop.fs.Path(dir, ".first.tmp")
+      val second = new org.apache.hadoop.fs.Path(dir, ".second.tmp")
+      write(first, "graft-tx v1\nfirst writer\n")
+      write(second, "graft-tx v1\nsecond writer, longer body\n")
+      assert(TxTable.claim(fs, first, target), fs.getClass)
+      assert(!fs.exists(first), "a won claim moves tmp away")
+      assert(!TxTable.claim(fs, second, target), s"${fs.getClass}: the target exists, the claim must lose")
+      assert(read(target) == "graft-tx v1\nfirst writer\n", fs.getClass)
+      assert(fs.exists(second), "a lost claim leaves tmp for its writer to delete")
+      // listed raw: the Hadoop local filesystem hides the checksum sidecars
+      val sidecars = fs match {
+        case _: org.apache.hadoop.fs.ChecksumFileSystem =>
+          Set(".00000000000000000001.commit.crc", "..second.tmp.crc")
+        case _ => Set.empty[String]
+      }
+      assert(new java.io.File(dir.toUri.getPath).list().toSet ==
+        Set("00000000000000000001.commit", ".second.tmp") ++ sidecars, fs.getClass)
+    }
+  }
 }
